@@ -78,7 +78,7 @@ object ScaleBench {
           .agg(sum("stat")).head()
       }._2)
       // stage breakdown of the lookup floor: driver gather vs kernel
-      val tGather = gate("gather")(time { Lisa.gather(vals) }._2)
+      val tGather = gate("gather")(time { Lisa.gather(Lisa.asVals(vals, "value")) }._2)
       val binVals = points.select(col("gid"),
         (pmod(xxhash64(col("gid"), lit(3)), lit(2L))).cast("double").as("value"))
       val tJc = gate("joincount")(time {

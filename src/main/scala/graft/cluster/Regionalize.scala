@@ -237,7 +237,6 @@ object Regionalize {
     @inline def dSet(i: Int, j: Int, v: Double): Unit =
       if (useFull) { dFull(i * n + j) = v; dFull(j * n + i) = v }
       else dCond(dIdx(i, j)) = v
-    val tInit0 = System.nanoTime()
     // O(N²) matrix fill, parallel by row: every (i, j) entry is an
     // independent pure function of the value matrix, so threading the
     // row loop is bit-identical to the serial fill. (The sweep below is
@@ -260,9 +259,6 @@ object Regionalize {
       }
     }
 
-    if (sys.props.contains("graft.redcap.profile") ||
-        sys.env.contains("GRAFT_REDCAP_PROFILE"))
-      println(f"fullOrderTree: init=${(System.nanoTime() - tInit0) / 1e9}%.2f")
     val uf = new UnionFind(n)
     val sizes = Array.fill(n)(1)
     @inline def pairKey(a: Int, b: Int): Long =
@@ -312,9 +308,6 @@ object Regionalize {
       case "singlelinkage" => 0; case "completelinkage" => 1
       case "averagelinkage" => 2; case _ => 3
     }
-    val prof = sys.props.contains("graft.redcap.profile") ||
-      sys.env.contains("GRAFT_REDCAP_PROFILE")
-
     // Persistent worker pool for the per-merge LW sweep. A fork/join
     // submission per merge costs ~0.15 ms of coordination — at ~N
     // parallel merges that overhead DOMINATED the sweep (measured ~2.5 s
@@ -371,14 +364,11 @@ object Regionalize {
       th.start()
     }
 
-    var tSweep = 0L; var tBook = 0L; var nPops = 0L; var nPush = 0L
-    val tLoop0 = System.nanoTime()
     val tree = mutable.ArrayBuffer.empty[(Int, Int)]
     var nClusters = n
     try {
     while (nClusters > 1 && heap.size > 0) {
       heap.pop()
-      nPops += 1
       val d = heap.topD; val ra = heap.topA; val rb = heap.topB
       // valid iff both are live roots, still contiguous, and d is current
       val live = uf.find(ra) == ra && uf.find(rb) == rb &&
@@ -396,7 +386,6 @@ object Regionalize {
         // full Lance-Williams sweep over all live roots (branch-free
         // dispatch: the string match was ~20x the arithmetic per step);
         // the worker pool takes over while the live set is large
-        val tS0 = if (prof) System.nanoTime() else 0L
         if (usePool && liveCnt >= parThreshold) {
           mRa = ra; mRb = rb; mC = c; mCnt = liveCnt
           mD = d; mNAd = nAd; mNBd = nBd; mInvAB = invAB
@@ -408,8 +397,6 @@ object Regionalize {
             lwUpdateAt(liveArr(p), ra, rb, c, d, nAd, nBd, invAB); p += 1
           }
         }
-        if (prof) tSweep += System.nanoTime() - tS0
-        val tB0 = if (prof) System.nanoTime() else 0L
         // contiguity bookkeeping + heap entries only for contiguous pairs
         nbrs.foreach { x2 =>
           val kc = pairKey(c, x2)
@@ -422,9 +409,7 @@ object Regionalize {
           }
           contig(x2) -= ra; contig(x2) -= rb; contig(x2) += c
           heap.push(dGet(c, x2), math.min(c, x2), math.max(c, x2))
-          nPush += 1
         }
-        if (prof) tBook += System.nanoTime() - tB0
         unlink(o)
         contig(c) = nbrs
         contig(o) = null // free
@@ -437,10 +422,6 @@ object Regionalize {
       if (phaser != null) phaser.forceTermination()
     }
     require(nClusters == 1, "full-order tree did not converge (disconnected?)")
-    if (prof)
-      println(f"fullOrderTree: loop=${(System.nanoTime() - tLoop0) / 1e9}%.2f " +
-        f"sweep=${tSweep / 1e9}%.2f book=${tBook / 1e9}%.2f " +
-        s"pops=$nPops pushes=$nPush heapPeak=${heap.size}")
     tree.toArray
   }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -340,7 +340,7 @@ object Dedup {
     import spark.implicits._
     val dim =
       if (dimHint > 0) dimHint
-      else emb.select(size(col(vecCol))).head().getInt(0)
+      else Similarity.dimOf(emb, vecCol)
     // mix64-finalized: raw short-string FNV-1a leaves plane entries for
     // adjacent (t, p) nearly identical (no final avalanche), which made
     // the planes almost PARALLEL — one effective direction per band and
@@ -686,14 +686,16 @@ object Dedup {
     // a full count() would replay the (possibly expensive, uncached)
     // upstream plan once before any clustering work. The probe returns
     // the DIMENSION too, so neither branch pays a second limit-1 job
-    // for it (the flat path's centroid build used to run its own).
-    val dimProbe: Option[Int] =
-      if (nClusters0 > 0) {
-        val r = renamed.select(size(col("embedding"))).limit(1).collect()
-        r.headOption.map(_.getInt(0))
-      } else None
+    // for it (the flat path's centroid build used to run its own). A
+    // null embedding sizes to null (or -1 without ANSI): no hint then.
+    val probe: Array[Row] =
+      if (nClusters0 > 0)
+        renamed.select(size(col("embedding"))).limit(1).collect()
+      else Array.empty
+    val dimProbe: Option[Int] = probe.headOption
+      .filterNot(_.isNullAt(0)).map(_.getInt(0)).filter(_ > 0)
     val n: Long =
-      if (nClusters0 > 0) { if (dimProbe.isEmpty) 0L else -1L }
+      if (nClusters0 > 0) { if (probe.isEmpty) 0L else -1L }
       else renamed.count()
     if (n == 0)
       return SemAssign(null, null, 0L, multiProbe = false,
@@ -731,7 +733,7 @@ object Dedup {
       // have the same dimensionality as the embeddings); reuses the
       // emptiness probe's value when it ran
       val dim = dimProbe.getOrElse(
-        renamed.select(size(col("embedding"))).head().getInt(0))
+        Similarity.dimOf(renamed, "embedding"))
       val cents1 = Similarity.scatteredCentroids(renamed, k1, dim)
       val a1 = Similarity.assignNearest(
         Similarity.normalized(renamed), cents1)

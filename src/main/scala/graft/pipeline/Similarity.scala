@@ -25,6 +25,16 @@ object Similarity {
   private def dot(a: String, b: String) =
     graft.catalyst.GraftFunctions.dot_arr(col(a), col(b))
 
+  /** Vector dimension: the size of the first non-null, non-empty
+    * `vecCol` (a null vector sizes to null under ANSI mode).
+    */
+  private[graft] def dimOf(frame: DataFrame, vecCol: String): Int = {
+    val r = frame.select(size(col(vecCol)).as("d")).where(col("d") > 0)
+      .limit(1).collect()
+    require(r.nonEmpty, s"no non-empty $vecCol to take the dimension of")
+    r(0).getInt(0)
+  }
+
   /** L2-normalize the vector column into `unit` (array<double>). */
   def normalized(emb: DataFrame, idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame =
@@ -149,7 +159,7 @@ object Similarity {
     val assigned = assignNearestEuclid(f, seeds)
     val dim =
       if (dimHint > 0) dimHint
-      else f.select(size(col("vec"))).head().getInt(0)
+      else dimOf(f, "vec")
     val out = assigned.groupBy("cid")
       .agg(array((0 until dim).map(i => avg(col("vec")(i))): _*).as("cvec"))
       .withColumn("cn2", aggregate(transform(col("cvec"), x => x * x),
@@ -274,7 +284,7 @@ object Similarity {
     val assigned = assignNearest(c, seeds)
     val dim =
       if (dimHint > 0) dimHint
-      else c.select(size(col("unit"))).head().getInt(0)
+      else dimOf(c, "unit")
     val out = assigned.groupBy("cid")
       .agg(array((0 until dim).map(i =>
         avg(col("unit")(i))): _*).as("cunit"))
@@ -316,7 +326,7 @@ object Similarity {
     val c = if (inputCached) c0 else c0.cache()
     val dim =
       if (dimHint > 0) dimHint
-      else c.select(size(col("unit"))).head().getInt(0)
+      else dimOf(c, "unit")
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
     def subSlices(v: org.apache.spark.sql.Column) =
@@ -512,7 +522,7 @@ object Similarity {
                   m: Int = 8, ksub: Int = 16): IvfAdcIndex = {
     // one dim probe shared by the coarse and the residual-PQ training
     // (each used to run its own limit-1 job)
-    val dim = corpus.select(size(col("embedding"))).head().getInt(0)
+    val dim = dimOf(corpus, "embedding")
     // centroid/codebook frames come back as LOCAL relations below the
     // driver bound — caching those would only wrap a job-free local
     // scan in distributed cache blocks

@@ -1,8 +1,11 @@
 package graft.stats
 
 import graft.core.Stat0
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
 /** Distributed LISA execution.
@@ -24,8 +27,6 @@ import org.apache.spark.sql.types._
   * sub-window drops out-of-window neighbors and renumbers ids — i.e.
   * per-tile LISA is reference-exact behavior, not an approximation.
   */
-case class LisaOut(gid: Long, stat: Double, p: Double, c: Double)
-
 object Lisa {
 
   case class Conf(
@@ -49,163 +50,153 @@ object Lisa {
     StructField("gid", LongType), StructField("stat", DoubleType),
     StructField("p", DoubleType), StructField("c", DoubleType)))
 
-  /** Collect (gid asc) → (gids, values). Driver-side gather of the value
-    * vector = the broadcast build step. Deterministic: exact-sum moments,
-    * gid-sorted order.
+  /** Wrap value columns as the (gid, vals: array<double>) frame both
+    * engines read, e.g. `asVals(values, "value", "value2")`.
     */
-  def gather(values: DataFrame): (Array[Long], Array[Double]) = {
-    // per-partition primitive-array collect (packs on executors, no
-    // per-row Row boxing on the driver), then one driver sort by gid —
-    // ~10x faster than orderBy().collect() for broadcast-vector builds
-    val spark = values.sparkSession
-    import spark.implicits._
-    val parts = values.select(col("gid").cast("long"), col("value").cast("double"))
-      .as[(Long, Double)]
-      .mapPartitions { it =>
-        val gs = Array.newBuilder[Long]; val vs = Array.newBuilder[Double]
-        it.foreach { case (g, v) => gs += g; vs += v }
-        Iterator.single((gs.result(), vs.result()))
-      }.collect()
-    val n = parts.iterator.map(_._1.length).sum
-    val rawG = new Array[Long](n)
-    val rawV = new Array[Double](n)
-    var i = 0
-    parts.foreach { case (gs, vs) =>
-      System.arraycopy(gs, 0, rawG, i, gs.length)
-      System.arraycopy(vs, 0, rawV, i, vs.length)
-      i += gs.length
+  def asVals(values: DataFrame, cols: String*): DataFrame =
+    values.select(col("gid"),
+      array(cols.map(c => col(c).cast("double")): _*).as("vals"))
+
+  /** Raw read of one (gid, vals) pair at ordinals (at, at+1), shared by
+    * both engines' row passes. The raw pass skips typed decoding, so
+    * nulls are rejected here, naming the gid (`toDoubleArray` would read
+    * a null slot as 0.0).
+    */
+  private[stats] def readRow(row: InternalRow, at: Int): (Long, Array[Double]) = {
+    require(!row.isNullAt(at), "null gid in value table")
+    val gid = row.getLong(at)
+    require(!row.isNullAt(at + 1), s"null value at gid $gid")
+    val arr = row.getArray(at + 1)
+    var k = 0
+    while (k < arr.numElements()) {
+      require(!arr.isNullAt(k), s"null value at gid $gid")
+      k += 1
     }
-    // primitive sort + binary-search permutation: no boxed comparator
-    val gids = rawG.clone()
-    java.util.Arrays.sort(gids)
-    i = 1
-    while (i < n) {
-      require(gids(i) != gids(i - 1),
-        s"duplicate gid ${gids(i)} in value table")
-      i += 1
-    }
-    val vals = new Array[Double](n)
-    i = 0
-    while (i < n) {
-      vals(java.util.Arrays.binarySearch(gids, rawG(i))) = rawV(i)
-      i += 1
-    }
-    (gids, vals)
+    (gid, arr.toDoubleArray())
   }
 
-  /** Multivariate gather: same executor-side primitive packing as
-    * `gather` (no driver-side Row boxing/sort), one column-major matrix
-    * per variable in gid-sorted order.
+  /** Column-major value matrix over gid-sorted rows: `mat(v)(i)` is
+    * variable v at `gids(i)`. Rejects duplicate gids and ragged rows.
     */
-  private def gatherMulti(values: DataFrame): (Array[Long], Array[Array[Double]]) = {
-    val spark = values.sparkSession
-    import spark.implicits._
-    val parts = values.select(col("gid").cast("long"), col("vals"))
-      .as[(Long, Seq[Double])]
-      .mapPartitions { it =>
-        val gs = Array.newBuilder[Long]
-        val vs = Array.newBuilder[Array[Double]]
-        it.foreach { case (g, v) => gs += g; vs += v.toArray }
-        Iterator.single((gs.result(), vs.result()))
-      }.collect()
-    val n = parts.iterator.map(_._1.length).sum
-    require(n > 0, "gatherMulti over empty value table")
-    val rawG = new Array[Long](n)
-    val rawV = new Array[Array[Double]](n)
-    var i = 0
-    parts.foreach { case (gs, vs) =>
-      System.arraycopy(gs, 0, rawG, i, gs.length)
-      System.arraycopy(vs, 0, rawV, i, vs.length)
-      i += gs.length
-    }
-    val gids = rawG.clone()
-    java.util.Arrays.sort(gids)
-    i = 1
+  private[stats] def matrix(gids: Array[Long],
+      rows: Array[Array[Double]]): Array[Array[Double]] = {
+    val n = gids.length
+    var i = 1
     while (i < n) {
       require(gids(i) != gids(i - 1), s"duplicate gid ${gids(i)} in value table")
       i += 1
     }
-    val nv = rawV(0).length
+    val nv = rows(0).length
+    require(nv > 0, s"empty vals array at gid ${gids(0)}")
     val mat = Array.ofDim[Double](nv, n)
     i = 0
     while (i < n) {
-      val pos = java.util.Arrays.binarySearch(gids, rawG(i))
-      val row = rawV(i)
-      require(row.length == nv, s"ragged vals array at gid ${rawG(i)}")
+      val r = rows(i)
+      require(r.length == nv,
+        s"ragged vals array at gid ${gids(i)} ($nv vs ${r.length})")
       var v = 0
-      while (v < nv) { mat(v)(pos) = row(v); v += 1 }
+      while (v < nv) { mat(v)(i) = r(v); v += 1 }
       i += 1
     }
-    (gids, mat)
+    mat
   }
 
-  /** Run a kernel over weights rows with a broadcast context.
-    * `weights`: (gid, nbrs array<long>); output (gid, stat, p, c).
+  /** Collect a (gid, vals) frame → (gids ascending, column-major
+    * [[matrix]]): the broadcast build step. Rows are packed per partition
+    * on the executors (raw InternalRow reads, no boxed decoding), then
+    * sorted once by gid in the calling process.
+    */
+  def gather(values: DataFrame): (Array[Long], Array[Array[Double]]) = {
+    val src = values.select(col("gid").cast("long"),
+      col("vals").cast("array<double>"))
+    val parts = ColumnShim.toInternalRdd(src).mapPartitions { it =>
+      val gs = Array.newBuilder[Long]
+      val vs = Array.newBuilder[Array[Double]]
+      it.foreach { row => val (g, v) = readRow(row, 0); gs += g; vs += v }
+      Iterator.single((gs.result(), vs.result()))
+    }.collect()
+    val rawG = parts.flatMap(_._1)
+    val rawV = parts.flatMap(_._2)
+    require(rawG.nonEmpty, "empty value table")
+    // primitive sort + binary-search placement: no boxed comparator
+    val gids = rawG.clone()
+    java.util.Arrays.sort(gids)
+    val rows = new Array[Array[Double]](gids.length)
+    var i = 0
+    while (i < rawG.length) {
+      rows(java.util.Arrays.binarySearch(gids, rawG(i))) = rawV(i)
+      i += 1
+    }
+    (gids, matrix(gids, rows))
+  }
+
+  /** Kernel scratch for `numObs` observations whose widest neighbor list
+    * has `maxK` entries. 'lookup' shares one draw table sized by `maxK`;
+    * its shift trick needs 0 < maxK < numObs-1, so dense or tiny inputs
+    * fall back to 'complete'.
+    */
+  private[stats] def newScratch(conf: Conf, numObs: Int,
+      maxK: Int): LisaKernels.Scratch = {
+    val lt =
+      if (conf.permMethod == "lookup" && maxK > 0 && maxK < numObs - 1)
+        new LisaKernels.LookupTable(numObs, maxK, conf.permutations, conf.seed)
+      else null
+    new LisaKernels.Scratch(numObs, 65536, lt)
+  }
+
+  /** The broadcast engine: gather the whole (gid, vals) table, prepare
+    * `stat` over it once, then run its kernel over the weights rows
+    * (gid, nbrs array<long>) with the gids broadcast. Output (gid, stat,
+    * p, c).
     *
     * In 'lookup' mode the shared draw table must be sized by the GLOBAL
     * max neighbor count (the stream consumed per permutation depends on
     * it), so one cheap agg precomputes it — then every partition rebuilds
-    * the identical table locally from (seed, numObs, maxK): ~permutations
-    * × maxK draws once per task, no broadcast needed, still
-    * partitioning-invariant.
+    * the identical table locally from (seed, numObs, maxK): no broadcast
+    * needed, still partitioning-invariant.
     */
-  private def runKernel(weights: DataFrame, gids: Array[Long],
-      conf: Conf,
-      kernel: (Int, Array[Int], LisaKernels.Scratch) => LisaKernels.Triple): DataFrame = {
+  private def run(stat: TileLisa.Stat, values: DataFrame,
+      weights: DataFrame, conf: Conf): DataFrame = {
+    val (gids, mat) = gather(values)
+    val kernel = stat.prepare(mat, gids, conf)
     val spark = weights.sparkSession
     val bGids = spark.sparkContext.broadcast(gids)
     val numObs = gids.length
-    val lookupK: Int =
-      if (conf.permMethod != "lookup") -1
-      else {
-        val mk = weights.agg(max(size(col("nbrs")))).head().getInt(0)
-        // the shared-table shift trick needs maxK < numObs-1; beyond that
-        // (pathologically dense weights) fall back to 'complete'
-        if (mk > 0 && mk < numObs - 1) mk else -1
-      }
-    val permutations = conf.permutations
-    val seed = conf.seed
+    val maxK =
+      if (conf.permMethod != "lookup") 0
+      else weights.agg(max(size(col("nbrs")))).head().getInt(0)
     // raw InternalRow pass (as in the kNN group stage): neighbor arrays
     // read straight out of UnsafeRows into primitive buffers — no boxed
     // Seq[Long] per row on the permutation hot path
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     val src = weights.select(col("gid").cast("long"), col("nbrs"))
-    val outRdd = org.apache.spark.sql.graftshim.ColumnShim
-      .toInternalRdd(src)
-      .mapPartitions { it =>
-        val g = bGids.value
-        val lt = if (lookupK > 0)
-          new LisaKernels.LookupTable(numObs, lookupK, permutations, seed)
-        else null
-        val scratch = new LisaKernels.Scratch(numObs, 65536, lt)
-        it.map { row: InternalRow =>
-          val gid = row.getLong(0)
-          val idx = java.util.Arrays.binarySearch(g, gid)
-          require(idx >= 0, s"gid $gid not present in value table")
-          val nbrGids: Array[Long] =
-            if (row.isNullAt(1)) Array.emptyLongArray
-            else row.getArray(1).toLongArray()
-          val nbrs = new Array[Int](nbrGids.length)
-          var i = 0
-          while (i < nbrGids.length) {
-            val j = java.util.Arrays.binarySearch(g, nbrGids(i))
-            require(j >= 0, s"neighbor gid ${nbrGids(i)} not in value table")
-            nbrs(i) = j; i += 1
-          }
-          val t = kernel(idx, nbrs, scratch)
-          new GenericInternalRow(
-            Array[Any](gid, t.stat, t.p, t.c)): InternalRow
+    val outRdd = ColumnShim.toInternalRdd(src).mapPartitions { it =>
+      val g = bGids.value
+      val scratch = newScratch(conf, numObs, maxK)
+      it.map { row: InternalRow =>
+        val gid = row.getLong(0)
+        val idx = java.util.Arrays.binarySearch(g, gid)
+        require(idx >= 0, s"gid $gid not present in value table")
+        val nbrGids: Array[Long] =
+          if (row.isNullAt(1)) Array.emptyLongArray
+          else row.getArray(1).toLongArray()
+        val nbrs = new Array[Int](nbrGids.length)
+        var i = 0
+        while (i < nbrGids.length) {
+          val j = java.util.Arrays.binarySearch(g, nbrGids(i))
+          require(j >= 0, s"neighbor gid ${nbrGids(i)} not in value table")
+          nbrs(i) = j; i += 1
         }
+        val t = kernel(idx, nbrs, scratch)
+        new GenericInternalRow(Array[Any](gid, t.stat, t.p, t.c)): InternalRow
       }
+    }
     // materialize the kernel output once (4 fixed-width columns per
     // row): every declared consumer sorts the result, and a range-
     // partitioned sort SAMPLES its child — without this the
     // O(rows × k × permutations) kernel executes twice per query
     // (the same double-execution TileLisa.runMulti fixes; guide §1.4)
     graft.core.Materialize.releasing(
-      org.apache.spark.sql.graftshim.ColumnShim
-        .internalDf(spark, outRdd, outSchema), Nil)
+      ColumnShim.internalDf(spark, outRdd, outSchema), Nil)
   }
 
   /** `local_moran_fast` parity (`postgeoda/src/localmoran.c:149-221`,
@@ -216,24 +207,16 @@ object Lisa {
     */
   def localMoranFast(idx: Int, nbrIdxs: Array[Int], values: Array[Double],
                      conf: Conf = Conf()): (Double, Double) = {
-    val z = values.clone()
-    Stat0.standardize(z)
-    val scratch = new LisaKernels.Scratch(z.length,
-      math.max(1, nbrIdxs.length))
-    val t = LisaKernels.moran(idx, nbrIdxs, z, conf.permutations, conf.seed,
-      conf.cutoff, scratch)
+    val kernel = TileLisa.Moran.prepare(Array(values),
+      Array.tabulate(values.length)(_.toLong), conf)
+    val t = kernel(idx, nbrIdxs,
+      new LisaKernels.Scratch(values.length, math.max(1, nbrIdxs.length)))
     (t.stat, t.p)
   }
 
   /** Local Moran's I → (gid, stat=I, p, c=cluster). */
-  def localMoran(values: DataFrame, weights: DataFrame, conf: Conf = Conf()): DataFrame = {
-    val (gids, vals) = gather(values)
-    Stat0.standardize(vals)
-    val z = vals
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.moran(idx, nbrs, z, conf.permutations, conf.seed,
-        conf.cutoff, scratch))
-  }
+  def localMoran(values: DataFrame, weights: DataFrame, conf: Conf = Conf()): DataFrame =
+    run(TileLisa.Moran, asVals(values, "value"), weights, conf)
 
   /** `local_moran_b` (`moran.sql:36-43`; the reference marks it
     * to-be-deprecated but it is still part of its SQL surface): local
@@ -261,115 +244,37 @@ object Lisa {
     * [[localMoran]].
     */
   def localBiMoran(values: DataFrame, weights: DataFrame,
-                   conf: Conf = Conf()): DataFrame = {
-    val (gids, mat) = gatherMulti(
-      values.select(col("gid"),
-        array(col("value").cast("double"),
-          col("value2").cast("double")).as("vals")))
-    val zx = mat(0); val zy = mat(1)
-    Stat0.standardize(zx); Stat0.standardize(zy)
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.biMoran(idx, nbrs, zx, zy, conf.permutations, conf.seed,
-        conf.cutoff, scratch))
-  }
+                   conf: Conf = Conf()): DataFrame =
+    run(TileLisa.BiMoran, asVals(values, "value", "value2"), weights, conf)
 
   /** Getis-Ord G_i / G_i* → (gid, stat, p, c). */
   def localG(values: DataFrame, weights: DataFrame, star: Boolean,
-             conf: Conf = Conf()): DataFrame = {
-    val (gids, x) = gather(values)
-    var sumAll = 0.0
-    x.foreach(sumAll += _) // gid-sorted order → deterministic
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      if (star) LisaKernels.localGStar(idx, nbrs, x, sumAll,
-        conf.permutations, conf.seed, conf.cutoff, scratch)
-      else LisaKernels.localG(idx, nbrs, x, sumAll,
-        conf.permutations, conf.seed, conf.cutoff, scratch))
-  }
+             conf: Conf = Conf()): DataFrame =
+    run(if (star) TileLisa.GStar else TileLisa.G, asVals(values, "value"), weights, conf)
 
-  def localGeary(values: DataFrame, weights: DataFrame, conf: Conf = Conf()): DataFrame = {
-    val (gids, vals) = gather(values)
-    Stat0.standardize(vals)
-    val z = vals
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.geary(idx, nbrs, z, conf.permutations, conf.seed,
-        conf.cutoff, scratch))
-  }
+  def localGeary(values: DataFrame, weights: DataFrame, conf: Conf = Conf()): DataFrame =
+    run(TileLisa.Geary, asVals(values, "value"), weights, conf)
 
   /** Multivariate Geary over `vals: array<double>` column. */
   def localMultiGeary(values: DataFrame, weights: DataFrame,
-                      conf: Conf = Conf()): DataFrame = {
-    val (gids, mat) = gatherMulti(values)
-    val zs = mat.map(v => Stat0.scale(v, conf.scaleMethod))
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.multiGeary(idx, nbrs, zs, conf.permutations, conf.seed,
-        conf.cutoff, scratch))
-  }
-
-  private def requireBinary(x: Array[Double], what: String): Unit = {
-    var i = 0
-    while (i < x.length) {
-      require(x(i) == 0.0 || x(i) == 1.0,
-        s"$what must be binary 0/1 (joincount.c semantics); found ${x(i)}")
-      i += 1
-    }
-  }
+                      conf: Conf = Conf()): DataFrame =
+    run(TileLisa.MultiGeary, values, weights, conf)
 
   def localJoinCount(values: DataFrame, weights: DataFrame,
-                     conf: Conf = Conf()): DataFrame = {
-    val (gids, x) = gather(values)
-    requireBinary(x, "local_joincount variable")
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.joinCount(idx, nbrs, x, conf.permutations, conf.seed, scratch))
-  }
+                     conf: Conf = Conf()): DataFrame =
+    run(TileLisa.JoinCount, asVals(values, "value"), weights, conf)
 
   /** Bivariate join count; errors on co-location, replicating
     * `postgeoda/src/joincount.c:193-197`.
     */
   def localBiJoinCount(values: DataFrame /* gid, value, value2 */,
-                       weights: DataFrame, conf: Conf = Conf()): DataFrame = {
-    // reuse the multivariate primitive gather (executor-side packing)
-    val (gids, mat) = gatherMulti(
-      values.select(col("gid"),
-        array(col("value").cast("double"),
-          col("value2").cast("double")).as("vals")))
-    val n = gids.length
-    val x1 = mat(0); val x2 = mat(1)
-    var i = 0
-    requireBinary(x1, "local_bijoincount first variable")
-    requireBinary(x2, "local_bijoincount second variable")
-    i = 0
-    while (i < n) {
-      // strict reference parity: joincount.c:193-197 errors whenever
-      // r1[i] == r2[i] — including both-zero, not just co-located ones
-      require(x1(i) != x2(i),
-        "local bivariate join count works only when two events cannot " +
-          "happen in the same location (joincount.c:193-197); x1 == x2 at " +
-          "gid " + gids(i))
-      i += 1
-    }
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.biJoinCount(idx, nbrs, x1, x2, conf.permutations,
-        conf.seed, scratch))
-  }
+                       weights: DataFrame, conf: Conf = Conf()): DataFrame =
+    run(TileLisa.BiJoinCount, asVals(values, "value", "value2"), weights, conf)
 
   /** Co-location join count over `vals: array<double>` of binary vars. */
   def localMultiJoinCount(values: DataFrame, weights: DataFrame,
-                          conf: Conf = Conf()): DataFrame = {
-    val (gids, mat) = gatherMulti(values)
-    mat.zipWithIndex.foreach { case (v, vi) =>
-      requireBinary(v, s"local_multijoincount variable $vi") }
-    val n = gids.length
-    val prods = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      var p = 1.0; var v = 0
-      while (v < mat.length) { p *= mat(v)(i); v += 1 }
-      prods(i) = p; i += 1
-    }
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.multiJoinCount(idx, nbrs, prods, conf.permutations,
-        conf.seed, scratch))
-  }
+                          conf: Conf = Conf()): DataFrame =
+    run(TileLisa.MultiJoinCount, values, weights, conf)
 
   /** Quantile-bin membership indicator per GeoDa quantile classification:
     * breaks at percentiles 100*i/k (i=1..k-1), bin = 1 + #{breaks <= x}.
@@ -391,33 +296,13 @@ object Lisa {
     * quantile-bin membership, then local join count.
     */
   def quantileLisa(k: Int, q: Int, values: DataFrame, weights: DataFrame,
-                   conf: Conf = Conf()): DataFrame = {
-    val (gids, vals) = gather(values)
-    val x = quantileIndicator(vals, k, q)
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.joinCount(idx, nbrs, x, conf.permutations, conf.seed, scratch))
-  }
+                   conf: Conf = Conf()): DataFrame =
+    run(TileLisa.Quantile(k, q), asVals(values, "value"), weights, conf)
 
   /** Multivariate quantile LISA: AND of per-variable bin indicators, then
     * join count (`quantilelisa.c:143-300` / proxy_quantilelisa.cpp:61-115).
     */
   def multiQuantileLisa(ks: Array[Int], qs: Array[Int], values: DataFrame,
-                        weights: DataFrame, conf: Conf = Conf()): DataFrame = {
-    val (gids, mat) = gatherMulti(values)
-    require(ks.length == mat.length && qs.length == mat.length,
-      "ks/qs/vars arity mismatch")
-    val n = gids.length
-    val ind = mat.zipWithIndex.map { case (v, i) =>
-      quantileIndicator(v, ks(i), qs(i)) }
-    val prods = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      var p = 1.0; var v = 0
-      while (v < ind.length) { p *= ind(v)(i); v += 1 }
-      prods(i) = p; i += 1
-    }
-    runKernel(weights, gids, conf, (idx, nbrs, scratch) =>
-      LisaKernels.joinCount(idx, nbrs, prods, conf.permutations, conf.seed,
-        scratch))
-  }
+                        weights: DataFrame, conf: Conf = Conf()): DataFrame =
+    run(TileLisa.MultiQuantile(ks.toSeq, qs.toSeq), values, weights, conf)
 }

@@ -28,6 +28,11 @@ object LisaKernels {
 
   final case class Triple(stat: Double, p: Double, c: Double)
 
+  /** A prepared statistic's per-row kernel: (row index, neighbor
+    * indices, scratch) → triple.
+    */
+  type Kernel = (Int, Array[Int], Scratch) => Triple
+
   /** Reusable per-thread scratch to avoid per-row allocation.
     * `permMean` is set by `permutationP` to the mean of the permuted
     * statistics of the LAST call — the empirical expectation some cluster
@@ -312,11 +317,4 @@ object LisaKernels {
       (d, m) => xi * sumAt(x2, d, m))
     Triple(obs, p, n.toDouble)
   }
-
-  /** Co-location (multivariate) join count: prod_v(x_vi) times
-    * sum_nbr(prod_v(x_vj)); `prods` is the precomputed row-product vector.
-    */
-  def multiJoinCount(idx: Int, nbrs: Array[Int], prods: Array[Double],
-                     permutations: Int, seed: Int, scratch: Scratch): Triple =
-    joinCount(idx, nbrs, prods, permutations, seed, scratch)
 }

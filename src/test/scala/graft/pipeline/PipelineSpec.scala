@@ -186,6 +186,28 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("semantic dedup: a null first embedding is no dimension hint") {
+    import spark.implicits._
+    // the emptiness+dimension probe reads the FIRST row; its null
+    // embedding sizes to null under ANSI mode and must not NPE
+    val (rows, all) = semanticFixture(11)
+    val emb = ((-1L, null.asInstanceOf[Seq[Float]]) +: rows)
+      .toDF("vec_id", "embedding")
+    val tau = 0.8
+    val truePairs = (for {
+      (ia, va) <- all.toSeq; (ib, vb) <- all.toSeq
+      if ia < ib && cos(va, vb) >= tau
+    } yield (ia, ib)).toSet
+    for (twoLevelK <- Seq(4096, 9)) {
+      val found = Dedup.semanticNearDup(emb, threshold = tau, nClusters = 24,
+          twoLevelK = twoLevelK)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(found.subsetOf(truePairs), s"false positives: ${found -- truePairs}")
+      assert(found.size.toDouble / truePairs.size >= 0.8,
+        s"recall ${found.size}/${truePairs.size} (twoLevelK=$twoLevelK)")
+    }
+  }
+
   test("semantic dedup two-level residual path: same guarantees as flat") {
     import spark.implicits._
     // same fixture shape as the flat test, but the two-level (coarse +

@@ -96,6 +96,18 @@ class LisaSpec extends AnyFunSuite {
       Lisa.localBiJoinCount(bothZero, w).collect()
     }
     assert(ex2.getMessage.contains("same location"))
+    // both engines fail with one message naming the first bad gid
+    val msg = "cannot happen in the same location (joincount.c:193-197); " +
+      "x1 == x2 at gid 1"
+    for (v <- Seq(bad, bothZero)) {
+      val b = intercept[Exception] { Lisa.localBiJoinCount(v, w).collect() }
+      val t = intercept[Exception] {
+        TileLisa.runMulti(TileLisa.BiJoinCount, pts,
+          Lisa.asVals(v, "value", "value2"), w, tileSize = 1e6).collect()
+      }
+      assert(b.getMessage.contains(msg), b.getMessage)
+      assert(t.getMessage.contains(msg), t.getMessage)
+    }
   }
 
   test("join count validates binary input") {
@@ -105,6 +117,51 @@ class LisaSpec extends AnyFunSuite {
     val bad = (1 to 20).map(i => (i.toLong, i.toDouble)).toDF("gid", "value")
     val ex = intercept[Exception] { Lisa.localJoinCount(bad, w).collect() }
     assert(ex.getMessage.contains("binary"))
+    // both engines, every join-count statistic: one message naming the
+    // first non-binary gid (gid 2 holds 2.0)
+    val msg = "must be binary 0/1 (joincount.c semantics); found 2.0 at gid 2"
+    val badMv = bad.select(col("gid"), array(col("value"), lit(0.0)).as("vals"))
+    val badBi = bad.withColumn("value2", lit(0.0))
+    val cases = Seq[(String, () => Any)](
+      "broadcast joincount" -> (() => Lisa.localJoinCount(bad, w).collect()),
+      "tile joincount" -> (() => TileLisa.run(TileLisa.JoinCount, pts, bad, w,
+        tileSize = 1e6).collect()),
+      "broadcast bijoincount" -> (() =>
+        Lisa.localBiJoinCount(badBi, w).collect()),
+      "tile bijoincount" -> (() => TileLisa.runMulti(TileLisa.BiJoinCount,
+        pts, Lisa.asVals(badBi, "value", "value2"), w, tileSize = 1e6)
+        .collect()),
+      "broadcast multijoincount" -> (() =>
+        Lisa.localMultiJoinCount(badMv, w).collect()),
+      "tile multijoincount" -> (() => TileLisa.runMulti(
+        TileLisa.MultiJoinCount, pts, badMv, w, tileSize = 1e6).collect()))
+    for ((name, run) <- cases) {
+      val e = intercept[Exception] { run() }
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("null values fail naming the gid in both engines") {
+    import spark.implicits._
+    val pts = points(20)
+    val w = KnnWeights.build(pts, KnnWeights.Conf(k = 2, cellSize = Some(8.0)))
+    val v = (1 to 20).map(i =>
+      (i.toLong, if (i == 5) None else Some(i.toDouble))).toDF("gid", "value")
+    val mv = (1 to 20).map(i => (i.toLong,
+      if (i == 5) null else Seq(i.toDouble, 1.0))).toDF("gid", "vals")
+    val cases = Seq[(String, () => Any)](
+      "broadcast moran" -> (() => Lisa.localMoran(v, w).collect()),
+      "tile moran" -> (() =>
+        TileLisa.run(TileLisa.Moran, pts, v, w, tileSize = 1e6).collect()),
+      "broadcast bimoran" -> (() => Lisa.localBiMoran(
+        v.withColumn("value2", col("value")), w).collect()),
+      "broadcast multigeary" -> (() => Lisa.localMultiGeary(mv, w).collect()),
+      "tile multigeary" -> (() => TileLisa.runMulti(TileLisa.MultiGeary,
+        pts, mv, w, tileSize = 1e6).collect()))
+    for ((name, run) <- cases) {
+      val e = intercept[Exception] { run() }
+      assert(e.getMessage.contains("null value at gid 5"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("quantile indicator: GeoDa bin assignment") {

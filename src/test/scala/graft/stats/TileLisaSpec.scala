@@ -184,6 +184,51 @@ class TileLisaSpec extends AnyFunSuite {
     assert(mqT.sameElements(mqB))
   }
 
+  test("single tile equals broadcast mode for every Stat, both permMethods") {
+    import spark.implicits._
+    val n = 100
+    val pts = points(n)
+    val w = KnnWeights.build(pts, KnnWeights.Conf(k = 4, cellSize = Some(4.0)))
+    val cont = (1 to n).map(i => (i.toLong,
+      Seq((i * 37 % 101).toDouble, (i * 17 % 1000).toDouble))).toDF("gid", "vals")
+    val bin = (1 to n).map(i => (i.toLong,
+      Seq(if ((i * 13) % 7 < 3) 1.0 else 0.0, if ((i * 11) % 5 < 2) 1.0 else 0.0)))
+      .toDF("gid", "vals")
+    // complementary indicators → never co-located
+    val comp = (1 to n).map { i =>
+      val x1 = if ((i * 13) % 7 < 3) 1.0 else 0.0
+      (i.toLong, Seq(x1, 1.0 - x1))
+    }.toDF("gid", "vals")
+    def first(mv: org.apache.spark.sql.DataFrame) =
+      mv.select(col("gid"), col("vals")(0).as("value"))
+    def pair(mv: org.apache.spark.sql.DataFrame) =
+      mv.select(col("gid"), col("vals")(0).as("value"), col("vals")(1).as("value2"))
+    type Broadcast = Lisa.Conf => org.apache.spark.sql.DataFrame
+    val table = Seq[(TileLisa.Stat, org.apache.spark.sql.DataFrame, Broadcast)](
+      (TileLisa.Moran, cont, c => Lisa.localMoran(first(cont), w, c)),
+      (TileLisa.G, cont, c => Lisa.localG(first(cont), w, star = false, c)),
+      (TileLisa.GStar, cont, c => Lisa.localG(first(cont), w, star = true, c)),
+      (TileLisa.Geary, cont, c => Lisa.localGeary(first(cont), w, c)),
+      (TileLisa.JoinCount, bin, c => Lisa.localJoinCount(first(bin), w, c)),
+      (TileLisa.MultiGeary, cont, c => Lisa.localMultiGeary(cont, w, c)),
+      (TileLisa.BiMoran, cont, c => Lisa.localBiMoran(pair(cont), w, c)),
+      (TileLisa.BiJoinCount, comp, c => Lisa.localBiJoinCount(pair(comp), w, c)),
+      (TileLisa.MultiJoinCount, bin, c => Lisa.localMultiJoinCount(bin, w, c)),
+      (TileLisa.Quantile(5, 5), cont, c => Lisa.quantileLisa(5, 5, first(cont), w, c)),
+      (TileLisa.MultiQuantile(Seq(4, 4), Seq(4, 1)), cont,
+        c => Lisa.multiQuantileLisa(Array(4, 4), Array(4, 1), cont, w, c)))
+    for ((stat, vals, broadcastMode) <- table; method <- Seq("complete", "lookup")) {
+      val conf = Lisa.Conf(permutations = 199, permMethod = method)
+      val b = broadcastMode(conf).orderBy("gid")
+        .as[(Long, Double, Double, Double)].collect()
+      val t = TileLisa.runMulti(stat, pts, vals, w, tileSize = 1e6, conf)
+        .orderBy("gid").select("gid", "stat", "p", "c")
+        .as[(Long, Double, Double, Double)].collect()
+      assert(b.length == n, s"$stat $method row count")
+      assert(t.sameElements(b), s"$stat $method: tile != broadcast")
+    }
+  }
+
   test("multi-tile multivariate/quantile runs are partitioning-invariant") {
     import spark.implicits._
     val n = 200
