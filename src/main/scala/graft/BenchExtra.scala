@@ -1,18 +1,16 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-/** Optimization-round probe harness (guide §1.4): isolates the
-  * components of expensive declared queries with the noop sink and a
-  * job listener, so per-stage cost and per-query JOB COUNT (the
-  * fixed-latency driver of every small-input chain in local mode) are
-  * measurable. NOT part of the driver bench contract — Bench.scala is
-  * the frozen harness; numbers from here are cited as evidence in
-  * OPTIMIZATION_rNN.md only.
+/** Job-count probe: runs declared queries into the noop sink under a
+  * job listener, so each query's wall time, JOB COUNT (the fixed-latency
+  * driver of every small-input chain in local mode) and per-job seconds
+  * are measurable. Not part of the bench contract — `Bench` is the
+  * frozen harness.
   *
-  * Usage: SPARK_GRAFT_PROBE=tile77,pq108 sbt "runMain graft.BenchExtra"
+  * Usage: SPARK_GRAFT_PROBE=q77,q108 sbt "runMain graft.BenchExtra"
+  * (each name selects the first declared query with that prefix).
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_RUNS.
   */
 object BenchExtra {
@@ -49,132 +47,23 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-benchextra")
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
 
-    import graft.pipeline.{Similarity, SynthGeo}
-
-    def emb = SynthGeo.table(spark, sfDir, "embeddings")
-
-    // each probe: name -> () => Unit (one full evaluation)
-    val probes: Seq[(String, () => Unit)] = Seq(
-      "tile_nosort" -> (() => {
-        val pts = SynthGeo.customerPoints(spark, sfDir)
-        noop(graft.stats.TileLisa.run(graft.stats.TileLisa.Geary, pts,
-          SynthGeo.customerValues(spark, sfDir),
-          graft.weights.KnnWeights.build(pts,
-            graft.weights.KnnWeights.Conf(k = 4, cellSize = Some(4.0))),
-          tileSize = 40.0))
-      }),
-      "q77" -> (() => noop(
-        SparkEntry.queries("q77_tile_geary").apply(spark, sfDir))),
-      "q108" -> (() => noop(
-        SparkEntry.queries("q108_pq_encode").apply(spark, sfDir))),
-      "pqtrain" -> (() => noop(Similarity.pqTrain(emb, m = 4, ksub = 8))),
-      "pqencode" -> (() => {
-        val cb = Similarity.pqTrain(emb, m = 4, ksub = 8)
-        noop(Similarity.pqEncode(emb, cb))
-      }),
-      "embcount" -> (() => {
-        val r = emb.agg(count(lit(1)), size(first(col("embedding")))).head()
-        println(s"[probe] embeddings n=${r.getLong(0)} dim=${r.getInt(1)}")
-      }),
-      "pqencode_sorted" -> (() => {
-        val cb = Similarity.pqTrain(emb, m = 4, ksub = 8)
-        noop(Similarity.pqEncode(emb, cb)
-          .select(col("id"), posexplode(col("codes")))
-          .select(col("id"), col("pos").cast("int").as("sub"),
-            col("col").as("code"))
-          .orderBy("id", "sub"))
-      }),
-      "pqencode_ckpt" -> (() => {
-        val cb = Similarity.pqTrain(emb, m = 4, ksub = 8)
-        noop(Similarity.pqEncode(emb, cb).localCheckpoint(true)
-          .select(col("id"), posexplode(col("codes")))
-          .select(col("id"), col("pos").cast("int").as("sub"),
-            col("col").as("code"))
-          .orderBy("id", "sub"))
-      }),
-      "tile_p99" -> (() => {
-        val pts = SynthGeo.customerPoints(spark, sfDir)
-        noop(graft.stats.TileLisa.run(graft.stats.TileLisa.Geary, pts,
-          SynthGeo.customerValues(spark, sfDir),
-          graft.weights.KnnWeights.build(pts,
-            graft.weights.KnnWeights.Conf(k = 4, cellSize = Some(4.0))),
-          tileSize = 40.0,
-          conf = graft.stats.Lisa.Conf(permutations = 99)))
-      }),
-      "tile_lookup" -> (() => {
-        val pts = SynthGeo.customerPoints(spark, sfDir)
-        noop(graft.stats.TileLisa.run(graft.stats.TileLisa.Geary, pts,
-          SynthGeo.customerValues(spark, sfDir),
-          graft.weights.KnnWeights.build(pts,
-            graft.weights.KnnWeights.Conf(k = 4, cellSize = Some(4.0))),
-          tileSize = 40.0,
-          conf = graft.stats.Lisa.Conf(permMethod = "lookup")))
-      }),
-      "tiledist" -> (() => {
-        val pts = SynthGeo.customerPoints(spark, sfDir)
-        val d = pts.select(graft.core.Tiling.cellIdCol(col("x"), col("y"),
-            40.0).as("tile"))
-          .groupBy("tile").agg(count(lit(1)).as("n"))
-          .agg(count(lit(1)), max(col("n")), avg(col("n"))).head()
-        println(s"[probe] tiles=${d.getLong(0)} maxRows=${d.getLong(1)} " +
-          f"meanRows=${d.getDouble(2)}%.0f")
-      }),
-      "q109" -> (() => noop(
-        SparkEntry.queries("q109_ivfadc").apply(spark, sfDir))),
-      "q111" -> (() => noop(
-        SparkEntry.queries("q111_ivfadc_rerank").apply(spark, sfDir))),
-      "q104" -> (() => noop(
-        SparkEntry.queries("q104_semantic_dedup").apply(spark, sfDir))),
-      "q104b" -> (() => noop(
-        SparkEntry.queries("q104b_semantic_dedup_twolevel").apply(spark, sfDir))),
-      "q12k" -> (() => noop(
-        SparkEntry.queries("q12k_kernel_distband").apply(spark, sfDir))),
-      "q12" -> (() => noop(
-        SparkEntry.queries("q12_distband_pairs").apply(spark, sfDir))),
-      "q12_nosort" -> (() => noop(
-        graft.weights.DistanceWeights.pairs(
-          graft.pipeline.SynthGeo.customerPoints(spark, sfDir),
-          graft.weights.DistanceWeights.Conf(threshold = 8.0))
-          .select(col("gid"), col("nbr")))),
-      "q91" -> (() => noop(
-        SparkEntry.queries("q91_global_moran").apply(spark, sfDir))),
-      "q42" -> (() => noop(
-        SparkEntry.queries("q42_neighbor_match").apply(spark, sfDir))),
-      "q82" -> (() => noop(
-        SparkEntry.queries("q82_decontaminate").apply(spark, sfDir))),
-      "q99" -> (() => noop(
-        SparkEntry.queries("q99_curation_full_chain").apply(spark, sfDir))),
-    )
     val sel = sys.env.get("SPARK_GRAFT_PROBE")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set("q108"))
-    // any selected name not in the curated probe list falls back to the
-    // declared query with that prefix, consumed via the noop sink
-    val known = probes.map(_._1).toSet
-    val extra = sel.diff(known).toSeq.sorted.flatMap { p =>
-      SparkEntry.queries.keys.find(_.startsWith(p)).map { qn =>
-        p -> (() => noop(SparkEntry.queries(qn).apply(spark, sfDir)))
-      }
-    }
-    (probes ++ extra).filter(p => sel.contains(p._1)).foreach { case (name, body) =>
-      (1 to runs).foreach { i =>
-        log.reset()
-        val t0 = System.nanoTime()
-        body()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[probe] $name run$i wall=$sec%.3f ${log.report()}")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Seq("q108"))
+    sel.distinct.sorted.foreach { p =>
+      SparkEntry.queries.keys.find(_.startsWith(p)).foreach { qn =>
+        (1 to runs).foreach { i =>
+          log.reset()
+          val t0 = System.nanoTime()
+          noop(SparkEntry.queries(qn).apply(spark, sfDir))
+          val sec = (System.nanoTime() - t0) / 1e9
+          println(f"[probe] $p run$i wall=$sec%.3f ${log.report()}")
+        }
       }
     }
     spark.stop()

@@ -2,7 +2,6 @@ package graft
 
 import graft.stats.Lisa
 import graft.weights.KnnWeights
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput benchmark at reference-comparable row counts
@@ -21,16 +20,8 @@ import org.apache.spark.sql.functions._
 object ScaleBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalebench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local("graft-scalebench", cpus)
     try {
       val side = 1000.0 // domain side → ~n/1e6 pts per unit cell at n=1M
       val points = spark.range(n).select(

@@ -433,11 +433,11 @@ object SparkEntry {
         col("p_partkey").cast("long").as("gid"),
         array(col("p_retailprice").cast("double"),
           col("p_size").cast("double")).as("vals"))
-      // distributedMst: edge dissimilarities computed + sorted in Spark,
-      // driver streams them (O(N) state) — bit-identical to the collect
-      // path (RegionalizeSpec), so the committed golden hash is unchanged
+      // from distributedMstMinRows rows the tree's edges are sorted in
+      // Spark and streamed to the driver (O(N) state) — bit-identical to
+      // the collect path (RegionalizeSpec), so the golden hash is unchanged
       graft.cluster.Regionalize.run(v, queenWeights(s, dir),
-        graft.cluster.Regionalize.Conf(k = 6, distributedMst = true))
+        graft.cluster.Regionalize.Conf(k = 6))
         .orderBy("gid")
     }),
     "q41_redcap_ward" -> ((s, dir) => {

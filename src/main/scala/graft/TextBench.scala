@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.{Dedup, Similarity, TextAnalysis, TextExtract}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput bench for the LLM-training-data pipeline ops (dedup /
@@ -21,16 +20,8 @@ object TextBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_TEXT_N", "1000000").toLong
     val nEmb = sys.env.getOrElse("SPARK_GRAFT_TEXT_EMB", "200000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-textbench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local("graft-textbench", cpus)
     try {
       // every 20th doc reuses its successor's text → 5% dup pairs
       val textKey = when(pmod(col("id"), lit(20)) === 0,

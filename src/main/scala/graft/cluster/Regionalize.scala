@@ -31,17 +31,14 @@ object Regionalize {
       minRegionSize: Int = 0,
       /** optional (boundVals(i), minBound) spatial-constraint pair */
       minBound: Double = 0.0,
-      /** SKATER scale path: compute + sort edge dissimilarities in Spark
-        * and stream the sorted edges to the driver's union-find instead
-        * of collecting all E edges (first-order single linkage only;
-        * result is bit-identical — same (d, a, b) tie-break order). */
-      distributedMst: Boolean = false,
-      /** Below this many observations the collect-path MST runs even
-        * when `distributedMst` is set: at toy N the Spark range-sort's
-        * fixed stage latency (~1 s) dwarfs the O(E log E) driver sort it
-        * replaces, and the two paths are bit-identical anyway (the
-        * distributed sort key (d, a, b) IS the driver tie-break). Set 0
-        * to force the distributed path (tests / benchmarking).
+      /** From this many observations first-order single linkage builds
+        * its spanning tree in Spark: edge dissimilarities are computed
+        * and sorted there and streamed to the driver's union-find instead
+        * of collecting all E edges. Below it the collect path runs: at
+        * toy N the range-sort's fixed stage latency (~1 s) dwarfs the
+        * O(E log E) driver sort it replaces. The two paths are
+        * bit-identical (the distributed sort key (d, a, b) IS the driver
+        * tie-break). Set 0 to force the distributed path (tests).
         */
       distributedMstMinRows: Int = 65536)
 
@@ -70,8 +67,8 @@ object Regionalize {
     }
 
     val labels =
-      if (conf.distributedMst && n >= conf.distributedMstMinRows &&
-          conf.method == "firstorder-singlelinkage") {
+      if (conf.method == "firstorder-singlelinkage" &&
+          n >= conf.distributedMstMinRows) {
         val tree = firstOrderTreeDistributed(weights, scaled, gids,
           conf.distType == "manhattan")
         require(tree.length == n - 1,
@@ -204,26 +201,14 @@ object Regionalize {
       "wardlinkage").contains(linkage), s"unknown linkage '$linkage'")
     val ward = linkage == "wardlinkage"
     // Dissimilarity matrix, LW-updated in place: condensed upper
-    // triangle by default. A mirrored row-major FULL layout (three
-    // sequential streams per sweep instead of strided reads for x < row)
-    // was A/B-tested interleaved at 20k (graft.RedcapProfile, 4 rounds
-    // per layout) and made NO measurable difference — run-to-run wall
-    // swings 14-85 s on identical code/input in this sandbox, entirely
-    // host contention windows, and within a quiet window both layouts
-    // time the same. Condensed stays (half the memory); `full` remains
-    // available via -Dgraft.redcap.layout for re-running the experiment.
+    // triangle (a mirrored full layout timed the same at 20k and needs
+    // twice the memory).
     val nv = scaled.length
-    val useFull = sys.props.get("graft.redcap.layout") match {
-      case Some("full") => n <= 46000
-      case _ => false
-    }
-    val dFull: Array[Double] = if (useFull) new Array[Double](n * n) else null
-    val dCond: Array[Double] = if (useFull) null
-      else new Array[Double](n.toLong * (n - 1) / 2 match {
-        case m if m <= Int.MaxValue => m.toInt
-        case _ => throw new IllegalArgumentException(
-          s"full-order linkage needs an O(N^2) matrix; N=$n too large")
-      })
+    val dCond = new Array[Double](n.toLong * (n - 1) / 2 match {
+      case m if m <= Int.MaxValue => m.toInt
+      case _ => throw new IllegalArgumentException(
+        s"full-order linkage needs an O(N^2) matrix; N=$n too large")
+    })
     // no tuple: `val (a, b) = ...` here allocated a Tuple2 per access —
     // hundreds of millions of them across init + sweeps, which turned
     // the solve into a GC benchmark (13 s init for a 1.6 GB fill)
@@ -232,11 +217,8 @@ object Regionalize {
       val b = if (i < j) j else i
       a * n - a * (a + 1) / 2 + (b - a - 1)
     }
-    @inline def dGet(i: Int, j: Int): Double =
-      if (useFull) dFull(i * n + j) else dCond(dIdx(i, j))
-    @inline def dSet(i: Int, j: Int, v: Double): Unit =
-      if (useFull) { dFull(i * n + j) = v; dFull(j * n + i) = v }
-      else dCond(dIdx(i, j)) = v
+    @inline def dGet(i: Int, j: Int): Double = dCond(dIdx(i, j))
+    @inline def dSet(i: Int, j: Int, v: Double): Unit = dCond(dIdx(i, j)) = v
     // O(N²) matrix fill, parallel by row: every (i, j) entry is an
     // independent pure function of the value matrix, so threading the
     // row loop is bit-identical to the serial fill. (The sweep below is
@@ -321,8 +303,7 @@ object Regionalize {
     // ~16 workers saturate the sweep's memory bandwidth; beyond that the
     // barrier's unpark fan-out costs more than the extra threads earn
     // (A/B at 20k: 15 workers 1.2 s, 31 workers 2.3 s, 4 workers 2.7 s)
-    val nw = sys.env.get("GRAFT_REDCAP_WORKERS").map(_.toInt).getOrElse(
-      math.max(1, math.min(Runtime.getRuntime.availableProcessors - 1, 16)))
+    val nw = math.max(1, math.min(Runtime.getRuntime.availableProcessors - 1, 16))
     val usePool = n >= parThreshold && nw > 1
     var mRa = 0; var mRb = 0; var mC = 0; var mCnt = 0
     var mD = 0.0; var mNAd = 0.0; var mNBd = 0.0; var mInvAB = 0.0

@@ -1,5 +1,8 @@
 package graft.core
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+
 /** Distance + kernel functions. Planar euclidean is the default; arc
   * (great-circle) distance with mile/km units mirrors the reference's
   * `is_arc`/`is_mile` flags (`postgeoda/src/weights_knn.c:108-142`).
@@ -14,14 +17,6 @@ object Dist {
     math.sqrt(dx * dx + dy * dy)
   }
 
-  @inline def euclideanSq(x1: Double, y1: Double, x2: Double, y2: Double): Double = {
-    val dx = x1 - x2; val dy = y1 - y2
-    dx * dx + dy * dy
-  }
-
-  @inline def manhattan(x1: Double, y1: Double, x2: Double, y2: Double): Double =
-    math.abs(x1 - x2) + math.abs(y1 - y2)
-
   /** Great-circle (haversine); inputs in degrees lon/lat. */
   def arc(lon1: Double, lat1: Double, lon2: Double, lat2: Double,
           mile: Boolean): Double = {
@@ -33,10 +28,6 @@ object Dist {
       math.cos(la1) * math.cos(la2) * math.sin(dLo / 2) * math.sin(dLo / 2)
     2.0 * r * math.asin(math.min(1.0, math.sqrt(a)))
   }
-
-  def dist(x1: Double, y1: Double, x2: Double, y2: Double,
-           isArc: Boolean, isMile: Boolean): Double =
-    if (isArc) arc(x1, y1, x2, y2, isMile) else euclidean(x1, y1, x2, y2)
 
   /** Kernel functions over u = d/bandwidth, names per weights.h:322-340.
     * `useDiagonal` carries the reference's use_kernel_diagonals semantics
@@ -53,16 +44,32 @@ object Dist {
       case "epanechnikov" => if (u >= 1) 0.0 else 0.75 * (1.0 - u * u)
       case "quartic"      => if (u >= 1) 0.0 else (15.0 / 16.0) * math.pow(1.0 - u * u, 2)
       case "gaussian"     => math.exp(-0.5 * u * u) / math.sqrt(2.0 * math.Pi)
-      case other => throw new IllegalArgumentException(
-        s"unknown kernel '$other' (weights.h:322-340)")
+      case other => throw unknownKernel(other)
     }
   }
 
-  /** Inverse-distance weighting d^-power (knn/distance weights with
-    * `is_inverse`, `power` — weights_knn.c:108-142).
+  /** `kernel` as a Column function of u = d/bandwidth, for the weight
+    * builders (the self entry's weight is the caller's). An unknown
+    * name fails at this call.
     */
-  @inline def powWeight(d: Double, power: Double, inverse: Boolean): Double = {
-    val p = if (power == 1.0) d else math.pow(d, power)
-    if (inverse) { if (p == 0.0) 0.0 else 1.0 / p } else p
+  def kernelCol(name: String): Column => Column = name match {
+    case "triangular"   => u => when(u >= 1, 0.0).otherwise(lit(1.0) - u)
+    case "uniform"      => u => when(u >= 1, 0.0).otherwise(lit(0.5))
+    case "epanechnikov" => u => when(u >= 1, 0.0).otherwise(lit(0.75) * (lit(1.0) - u * u))
+    case "quartic"      => u => when(u >= 1, 0.0).otherwise(lit(15.0 / 16.0) * pow(lit(1.0) - u * u, 2))
+    case "gaussian"     => u => exp(lit(-0.5) * u * u) / math.sqrt(2.0 * math.Pi)
+    case other => throw unknownKernel(other)
   }
+
+  /** Distance weighting d^power, inverted (0 at d == 0) with
+    * `is_inverse` — knn/distance weights' `power`, `is_inverse`
+    * (weights_knn.c:108-142).
+    */
+  def powCol(d: Column, power: Double, inverse: Boolean): Column = {
+    val p = if (power == 1.0) d else pow(d, power)
+    if (inverse) when(p === 0.0, 0.0).otherwise(lit(1.0) / p) else p
+  }
+
+  private def unknownKernel(name: String) =
+    new IllegalArgumentException(s"unknown kernel '$name' (weights.h:322-340)")
 }

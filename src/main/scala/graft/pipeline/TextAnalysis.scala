@@ -151,8 +151,8 @@ object TextAnalysis {
     * n-grams for n = 1, 2, 3 (round 6) — the Gopher/C4-style
     * boilerplate signals. ONE typed pass per row: tokenize once, one
     * hash set per gram size. The column-HOF formulation (3× gram-array
-    * construction + array_distinct per size, retained below as
-    * [[repetitionStatsSql]] because it is what the q80 DuckDB oracle
+    * construction + array_distinct per size, kept in the specs as
+    * `RepetitionStatsSql` because it is what the q80 DuckDB oracle
     * mirrors) allocates ~2·tokens gram STRINGS per document and ran at
     * 45k docs/s at 1M×40-token scale; this pass is bit-identical —
     * gram keys joined on the separator the text was split on cannot
@@ -211,28 +211,6 @@ object TextAnalysis {
   private def round6(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** The column-expression formulation of [[repetitionStats]] — the
-    * shape the q80 oracle replays in SQL; kept as the equivalence
-    * reference for the typed fast path (RepetitionParitySpec asserts
-    * bit-identical frames on random corpora).
-    */
-  private[pipeline] def repetitionStatsSql(docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    def grams(n: Int): org.apache.spark.sql.Column =
-      wordGrams(col(textCol), n)
-    def dupFrac(g: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-      val total = size(g)
-      when(total === 0, lit(0.0))
-        .otherwise(lit(1.0) -
-          size(array_distinct(g)).cast("double") / total.cast("double"))
-    }
-    docs.select(col(idCol).cast("long").as("id"),
-      size(grams(1)).cast("long").as("n_words"),
-      round(dupFrac(grams(1)), 6).as("dup_word_frac"),
-      round(dupFrac(grams(2)), 6).as("dup_bigram_frac"),
-      round(dupFrac(grams(3)), 6).as("dup_trigram_frac"))
-  }
 
   /** PII patterns for [[redactPii]] — written in the RE2∩Java regex
     * subset (no lookaround, no backrefs) so the DuckDB oracle runs the

@@ -156,21 +156,11 @@ object DistanceWeights {
     } else {
       val w = conf.kernel match {
         case Some(kname) =>
-          val u = col("dist") / conf.threshold
-          val kv = kname match {
-            case "triangular"   => when(u >= 1, 0.0).otherwise(lit(1.0) - u)
-            case "uniform"      => when(u >= 1, 0.0).otherwise(lit(0.5))
-            case "epanechnikov" => when(u >= 1, 0.0).otherwise(lit(0.75) * (lit(1.0) - u * u))
-            case "quartic"      => when(u >= 1, 0.0).otherwise(lit(15.0 / 16.0) * pow(lit(1.0) - u * u, 2))
-            case "gaussian"     => exp(lit(-0.5) * u * u) / math.sqrt(2.0 * math.Pi)
-            case other          => throw new IllegalArgumentException(s"kernel $other")
-          }
+          val kv = Dist.kernelCol(kname)(col("dist") / conf.threshold)
           // diagonal: kernel(0) if useKernelDiagonals, else flat 1.0
           if (conf.useKernelDiagonals) kv
           else when(col("nbr") === col("gid"), 1.0).otherwise(kv)
-        case None =>
-          val pw = if (conf.power == 1.0) col("dist") else pow(col("dist"), conf.power)
-          if (conf.isInverse) when(pw === 0.0, 0.0).otherwise(lit(1.0) / pw) else pw
+        case None => Dist.powCol(col("dist"), conf.power, conf.isInverse)
       }
       p.withColumn("w", w)
         .groupBy("gid")

@@ -336,26 +336,17 @@ object KnnWeights {
     */
   def build(points: DataFrame, conf: Conf,
             homeFilter: Option[Column] = None): DataFrame = {
+    val kernel = conf.kernel.map(Dist.kernelCol) // unknown name: fail before the kNN jobs
     val rows = knnRows(points, conf, homeFilter)
     val valued = conf.kernel.isDefined || conf.isInverse || conf.power != 1.0
     if (!valued)
       rows.select(col("gid"), col("nbrs"),
         lit(null).cast("array<double>").as("wts"))
-    else conf.kernel match {
-      case Some(kname) =>
+    else kernel match {
+      case Some(kv) =>
         val bw =
           if (conf.adaptiveBandwidth) element_at(col("dists"), -1)
           else lit(rows.agg(max(element_at(col("dists"), -1))).head().getDouble(0))
-        val kv: Column => Column = { u =>
-          kname match {
-            case "triangular"   => when(u >= 1, 0.0).otherwise(lit(1.0) - u)
-            case "uniform"      => when(u >= 1, 0.0).otherwise(lit(0.5))
-            case "epanechnikov" => when(u >= 1, 0.0).otherwise(lit(0.75) * (lit(1.0) - u * u))
-            case "quartic"      => when(u >= 1, 0.0).otherwise(lit(15.0 / 16.0) * pow(lit(1.0) - u * u, 2))
-            case "gaussian"     => exp(lit(-0.5) * u * u) / math.sqrt(2.0 * math.Pi)
-            case other          => throw new IllegalArgumentException(s"kernel $other")
-          }
-        }
         // kernel weights include the diagonal (self) entry, matching the
         // reference's kernel handling (`sql/weights_knn.sql:40-46`,
         // `proxy.cpp:156-161` use_kernel_diagonal): self weight is
@@ -368,13 +359,8 @@ object KnnWeights {
           concat(array(diagW),
             transform(col("dists"), d => kv(d / bw))).as("wts"))
       case None =>
-        val wv: Column => Column = { d =>
-          val p = if (conf.power == 1.0) d else pow(d, conf.power)
-          if (conf.isInverse) when(p === 0.0, 0.0).otherwise(lit(1.0) / p)
-          else p
-        }
-        rows.select(col("gid"), col("nbrs"),
-          transform(col("dists"), wv).as("wts"))
+        rows.select(col("gid"), col("nbrs"), transform(col("dists"),
+          d => Dist.powCol(d, conf.power, conf.isInverse)).as("wts"))
     }
   }
 }

@@ -5,13 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all specs (JVM-wide). */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -45,8 +45,7 @@ class RegionalizeSpec extends AnyFunSuite {
       val conf = Regionalize.Conf(k = k)
       val drv = Regionalize.run(vals, w, conf)
         .orderBy("gid").as[(Long, Int)].collect()
-      val dist = Regionalize.run(vals, w, conf.copy(distributedMst = true,
-          distributedMstMinRows = 0))
+      val dist = Regionalize.run(vals, w, conf.copy(distributedMstMinRows = 0))
         .orderBy("gid").as[(Long, Int)].collect()
       assert(drv.sameElements(dist), s"k=$k")
     }
@@ -57,8 +56,7 @@ class RegionalizeSpec extends AnyFunSuite {
       .toDF("gid", "vals")
     val e = intercept[Exception] {
       Regionalize.run(vBad, wBad,
-        Regionalize.Conf(k = 2, distributedMst = true,
-          distributedMstMinRows = 0)).collect()
+        Regionalize.Conf(k = 2, distributedMstMinRows = 0)).collect()
     }
     assert(e.getMessage.contains("disconnected"))
   }

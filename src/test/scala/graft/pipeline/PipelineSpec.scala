@@ -404,7 +404,7 @@ class PipelineSpec extends AnyFunSuite {
     }.toDF("doc_id", "text")
     val fast = TextAnalysis.repetitionStats(docs)
       .as[(Long, Long, Double, Double, Double)].collect().sortBy(_._1)
-    val sql = TextAnalysis.repetitionStatsSql(docs)
+    val sql = RepetitionStatsSql(docs)
       .as[(Long, Long, Double, Double, Double)].collect().sortBy(_._1)
     assert(fast.length == sql.length)
     fast.zip(sql).foreach { case (f, s) =>

@@ -1,7 +1,8 @@
 package graft.weights
 
 import graft.SparkFixture
-import graft.core.Wkb
+import graft.core.{Dist, Wkb}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -183,6 +184,52 @@ class WeightsSpec extends AnyFunSuite {
     wg.foreach { case (gid, nbrs, wts) =>
       assert(nbrs.head == gid)
       assert(math.abs(wts.head - 1.0 / math.sqrt(2 * math.Pi)) < 1e-12)
+    }
+  }
+
+  test("kernel weights: every kernel x {kNN, distance band} x diagonals match Dist.kernel") {
+    import spark.implicits._
+    val df = points(60).cache()
+    val byGid = df.as[(Long, Double, Double)].collect()
+      .map(p => p._1 -> (p._2, p._3)).toMap
+    def d(a: Long, b: Long): Double = {
+      val (x1, y1) = byGid(a); val (x2, y2) = byGid(b)
+      Dist.euclidean(x1, y1, x2, y2)
+    }
+    def rows(w: DataFrame) =
+      w.select("gid", "nbrs", "wts").as[(Long, Seq[Long], Seq[Double])].collect()
+    val thr = 25.0
+    for (kn <- Seq("triangular", "uniform", "epanechnikov", "quartic", "gaussian");
+         diag <- Seq(false, true)) {
+      def check(g: Long, nbrs: Seq[Long], wts: Seq[Double], bw: Double): Unit = {
+        assert(nbrs.contains(g) && nbrs.length == wts.length)
+        nbrs.zip(wts).foreach { case (nb, w) =>
+          val want = Dist.kernel(kn, d(g, nb), bw, useDiagonal = diag)
+          assert(math.abs(w - want) < 1e-12, s"$kn diag=$diag gid $g nbr $nb")
+        }
+      }
+      // kNN: adaptive bandwidth = each row's kth-neighbor distance
+      val knn = rows(KnnWeights.build(df, KnnWeights.Conf(k = 4,
+        cellSize = Some(4.0), kernel = Some(kn), useKernelDiagonals = diag)))
+      assert(knn.length == 60)
+      knn.foreach { case (g, nbrs, wts) => check(g, nbrs, wts, d(g, nbrs.last)) }
+      // distance band: bandwidth = threshold
+      val band = rows(DistanceWeights.build(df, DistanceWeights.Conf(
+        threshold = thr, kernel = Some(kn), useKernelDiagonals = diag)))
+      assert(band.length == 60 && band.exists(_._2.length > 2))
+      band.foreach { case (g, nbrs, wts) => check(g, nbrs, wts, thr) }
+    }
+  }
+
+  test("an unknown kernel name fails in both weight builders") {
+    val df = points(20)
+    val builds = Seq[() => Any](
+      () => KnnWeights.build(df, KnnWeights.Conf(k = 3, kernel = Some("cosine"))),
+      () => DistanceWeights.build(df,
+        DistanceWeights.Conf(threshold = 10.0, kernel = Some("cosine"))))
+    builds.foreach { b =>
+      val e = intercept[IllegalArgumentException](b())
+      assert(e.getMessage.contains("unknown kernel 'cosine'"))
     }
   }
 
