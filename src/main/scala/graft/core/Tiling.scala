@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Planar grid tiling index. Replaces the reference's reliance on PostGIS
@@ -37,38 +37,25 @@ object Tiling {
     (floor(x / cellSize).cast("long") + Off) * Mul +
       (floor(y / cellSize).cast("long") + Off)
 
-  /** All cells of the Chebyshev-radius-`r` block around a cell. */
-  def block(cell: Long, r: Int): Array[Long] = {
-    val cx = cellIx(cell); val cy = cellIy(cell)
-    val out = new Array[Long]((2 * r + 1) * (2 * r + 1))
-    var k = 0
-    var dx = -r
-    while (dx <= r) {
-      var dy = -r
-      while (dy <= r) { out(k) = cellOf(cx + dx, cy + dy); k += 1; dy += 1 }
-      dx += 1
-    }
-    out
-  }
+  /** Cell-id offsets of the Chebyshev-radius-`r` block (dx-major): a
+    * cell id plus each offset is one cell of the block around it.
+    */
+  def blockDeltas(r: Int): Array[Long] =
+    (for (dx <- -r to r; dy <- -r to r) yield dx.toLong * Mul + dy).toArray
 
-  /** Only the ring at exact Chebyshev radius `r` (block minus interior). */
-  def ring(cell: Long, r: Int): Array[Long] = {
-    if (r == 0) return Array(cell)
-    val cx = cellIx(cell); val cy = cellIy(cell)
-    val out = new Array[Long](8 * r)
-    var k = 0
-    var dx = -r
-    while (dx <= r) {
-      var dy = -r
-      while (dy <= r) {
-        if (math.max(math.abs(dx), math.abs(dy)) == r) {
-          out(k) = cellOf(cx + dx, cy + dy); k += 1
-        }
-        dy += 1
-      }
-      dx += 1
-    }
-    out
+  /** Cell edge from point density: square cells holding ~`perCell`
+    * points under uniform density, `sqrt(w·h·perCell/n)` over the
+    * bounding box of `x`, `y`. Serves the kNN cells and the auto
+    * TileLisa windows alike.
+    */
+  def densityEdge(points: DataFrame, perCell: Double, x: Column,
+                  y: Column): Double = {
+    val b = points.agg(min(x), max(x), min(y), max(y), count(lit(1))).head()
+    require(!b.isNullAt(0), "density cell edge over empty points")
+    val w = math.max(b.getDouble(1) - b.getDouble(0), 1e-9)
+    val h = math.max(b.getDouble(3) - b.getDouble(2), 1e-9)
+    val n = b.getLong(4)
+    math.max(math.sqrt(w * h * perCell / math.max(1L, n)), 1e-9)
   }
 
   /** Cells overlapped by a bbox (for polygon tiling). */

@@ -1,6 +1,6 @@
 package graft.stats
 
-import graft.core.Stat0
+import graft.core.Tiling
 import graft.weights.KnnWeights
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * Spark shape: BOTH kNN sides run the cell-ring engine — ≤2-dim
   * euclidean attribute spaces reuse the planar engine directly
   * (attribute values become coordinates); 3+ dims and manhattan run the
-  * same discipline with full-dimensional exact distances over a 2-d
-  * projection grid ([[attrKnnHighDim]]) — no cross join and no O(N²)
+  * same ring search with full-dimensional exact distances over a 2-d
+  * projection grid ([[attrKnn]]) — no cross join and no O(N²)
   * stage at ANY dimensionality; scaling moments come from one
   * aggregation, not a driver collect. The hypergeometric p depends only
   * on the overlap cardinality v ∈ [0, k], so it's a k+1-element literal
@@ -147,9 +147,15 @@ object NeighborMatch {
   /** Exact attribute-space kNN pairs (gid, anbr) — no cross join at ANY
     * dimensionality. ≤2-dim euclidean (and 1-dim manhattan, which is the
     * same metric) maps attributes to coordinates and runs the planar
-    * cell-ring engine directly; everything else runs
-    * [[attrKnnHighDim]] — the same cell-ring discipline over the first
-    * two scaled dims with exact full-dimensional distances.
+    * cell-ring engine directly. Everything else runs the shared
+    * [[KnnWeights.ringSearch]] with grid cells over the FIRST TWO scaled
+    * dims (sized for ~k candidates per 3×3 block) and the exact
+    * full-dimensional L2 or L1 distance per candidate. Certification
+    * transfers from the planar engine because both full-space distances
+    * dominate the 2-d projection distance: a point outside the ±r block
+    * differs by ≥ r·cellSize in the projection, so `kth < r·cellSize`
+    * proves the top-k complete. Replaces the reference's single-node
+    * kd-tree (`neighbor_match.c:46-230`) at any dimensionality.
     */
   private[stats] def attrKnn(scaled: DataFrame, nv: Int, k: Int,
                              distType: String): DataFrame = {
@@ -158,111 +164,28 @@ object NeighborMatch {
         (if (nv == 2) col("sv")(1) else lit(0.0)).as("y"))
       KnnWeights.pairs(pts, KnnWeights.Conf(k = k))
         .select(col("gid"), col("nbr").as("anbr"))
-    } else attrKnnHighDim(scaled, nv, k, distType == "manhattan")
-  }
-
-  /** Exact d-dimensional kNN via the cell-ring discipline: grid cells
-    * over the FIRST TWO scaled dims (sized for ~k candidates per 3×3
-    * block), candidates from the ±r Chebyshev block, full-dimensional
-    * exact distance per candidate. Certification transfers from the
-    * planar engine because both L2 and L1 full-space distances dominate
-    * the 2-d projection distance: a point outside the ±r block differs
-    * by ≥ r·cellSize in the projection, so `kth < r·cellSize` proves the
-    * top-k complete. Uncertified stragglers re-run at doubled radius,
-    * ending in a broadcast completion of the (few) leftovers — the same
-    * loop shape as `KnnWeights.knnRows`, never an N×N cross join.
-    * Replaces the reference's single-node kd-tree
-    * (`neighbor_match.c:46-230`) at any dimensionality.
-    */
-  private def attrKnnHighDim(scaled: DataFrame, nv: Int, k: Int,
-                             manhattan: Boolean): DataFrame = {
-    val spark = scaled.sparkSession
-    import spark.implicits._
-    val b = scaled.agg(min(col("sv")(0)), max(col("sv")(0)),
-      min(col("sv")(1)), max(col("sv")(1)), count(lit(1))).head()
-    val (mnx, mxx, mny, mxy, n) = (b.getDouble(0), b.getDouble(1),
-      b.getDouble(2), b.getDouble(3), b.getLong(4))
-    val w = math.max(mxx - mnx, 1e-9); val h = math.max(mxy - mny, 1e-9)
-    val s = math.max(
-      math.sqrt(w * h * math.max(1, k) / math.max(1L, n)), 1e-9)
-
-    val pts = scaled.select(col("gid").cast("long").as("gid"), col("sv"))
-      .withColumn("cell",
-        graft.core.Tiling.cellIdCol(col("sv")(0), col("sv")(1), s))
-      .cache()
-    val ptsB = pts.select(col("gid").as("bgid"), col("sv").as("bsv"),
-      col("cell").as("bcell"))
-
-    val dims = nv // stable capture for the closure
-    def dist(a: Seq[Double], c: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < dims) {
-        val d = a(i) - c(i)
-        acc += (if (manhattan) math.abs(d) else d * d)
-        i += 1
-      }
-      if (manhattan) acc else math.sqrt(acc)
-    }
-
-    val loopCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var done: DataFrame = null
-    var unresolved = pts
-    var r = 1
-    var exhausted = false
-    var remaining = true
-    while (remaining) {
-      val cand =
-        if (!exhausted) {
-          val blockDeltas = (for (dx <- -r to r; dy <- -r to r)
-            yield dx.toLong * graft.core.Tiling.Mul + dy).toArray
-          unresolved
-            .withColumn("__delta", explode(typedLit(blockDeltas)))
-            .withColumn("__ccell", col("cell") + col("__delta"))
-            .join(ptsB, col("__ccell") === col("bcell"))
-            .filter(col("gid") =!= col("bgid"))
-        } else {
-          broadcast(unresolved).crossJoin(ptsB)
-            .filter(col("gid") =!= col("bgid"))
-        }
-      val rr = r; val ex = exhausted
-      val topk = cand.select(col("gid"), col("sv"), col("bgid"), col("bsv"))
-        .as[(Long, Seq[Double], Long, Seq[Double])]
-        .groupByKey(_._1)
-        .mapGroups { (gid, it) =>
-          // deterministic insertion top-k on (dist, gid) asc, k small
-          val ds = Array.fill(k)(Double.PositiveInfinity)
-          val gs = new Array[Long](k)
-          var sz = 0
-          it.foreach { c =>
-            val d = dist(c._2, c._4); val g = c._3
-            if (sz < k || d < ds(k - 1) || (d == ds(k - 1) && g < gs(k - 1))) {
-              var i = math.min(sz, k - 1)
-              while (i > 0 &&
-                     (ds(i - 1) > d || (ds(i - 1) == d && gs(i - 1) > g))) {
-                ds(i) = ds(i - 1); gs(i) = gs(i - 1); i -= 1
-              }
-              ds(i) = d; gs(i) = g
-              if (sz < k) sz += 1
-            }
+    } else {
+      val s = Tiling.densityEdge(scaled, math.max(1, k), col("sv")(0),
+        col("sv")(1))
+      val pts = scaled.select(col("gid").cast("long").as("gid"),
+        Tiling.cellIdCol(col("sv")(0), col("sv")(1), s).as("cell"),
+        col("sv").as("pos")).cache()
+      val manhattan = distType == "manhattan"
+      val (done, caches) = KnnWeights.ringSearch(pts, pts, k, s, 1,
+        (a, b) => {
+          var acc = 0.0; var i = 0
+          while (i < nv) {
+            val d = a(i) - b(i)
+            acc += (if (manhattan) math.abs(d) else d * d)
+            i += 1
           }
-          val certified = ex || (sz == k && ds(k - 1) < rr * s)
-          (gid, gs.take(sz).toSeq, certified)
-        }.toDF("gid", "anbrs", "certified").cache()
-      loopCaches += topk
-      val good = topk.filter(col("certified")).select("gid", "anbrs")
-      done = if (done == null) good else done.unionByName(good)
-      if (exhausted) remaining = false
-      else {
-        unresolved = unresolved.join(
-          topk.filter(col("certified")).select("gid"), Seq("gid"), "left_anti")
-        remaining = unresolved.limit(1).count() > 0
-        r *= 2
-        if (r > 64) exhausted = true
-      }
+          if (manhattan) acc else math.sqrt(acc)
+        },
+        (r, _) => r * s)
+      // same scoped-release pattern as KnnWeights.knnRows
+      graft.core.Materialize.releasing(done, pts +: caches)
+        .select(col("gid"), explode(col("nbrs")).as("anbr"))
     }
-    // same scoped-release pattern as KnnWeights.knnRows
-    val out = graft.core.Materialize.releasing(done, pts +: loopCaches.toSeq)
-    out.select(col("gid"), explode(col("anbrs")).as("anbr"))
   }
 
   /** points: (gid, x, y); values: (gid, vals array<double>).

@@ -162,36 +162,21 @@ object TileLisa {
     prods
   }
 
-  /** Tiles per window target, used when `tileSize <= 0`. */
-  val DefaultTileRows = 100000L
-
-  /** Derive a tile edge from point density: square tiles sized so a
-    * tile holds ~`targetRows` points under uniform density —
-    * `s = sqrt(w·h·target/n)` over the bounding box, the same density
-    * rule `NeighborMatch.attrKnnHighDim` uses for its candidate cells.
-    * 100k rows/window keeps the per-window kernel (O(rows × k × perms))
-    * and its lookup table comfortably inside one task while leaving
-    * ~n/100k tiles of parallelism; callers with strong window-semantics
-    * opinions (each tile IS a reference window) should pass an explicit
-    * `tileSize` instead.
+  /** Points per window when `tileSize <= 0`: the tile edge comes from
+    * [[graft.core.Tiling.densityEdge]]. 100k rows/window keeps the
+    * per-window kernel (O(rows × k × perms)) and its lookup table
+    * comfortably inside one task while leaving ~n/100k tiles of
+    * parallelism; callers with strong window-semantics opinions (each
+    * tile IS a reference window) should pass an explicit `tileSize`.
     */
-  def autoTileSize(points: DataFrame,
-                   targetRows: Long = DefaultTileRows): Double = {
-    val b = points.agg(min(col("x")), max(col("x")),
-      min(col("y")), max(col("y")), count(lit(1))).head()
-    require(!b.isNullAt(0), "autoTileSize over empty points")
-    val w = math.max(b.getDouble(1) - b.getDouble(0), 1e-9)
-    val h = math.max(b.getDouble(3) - b.getDouble(2), 1e-9)
-    val n = b.getLong(4)
-    math.max(math.sqrt(w * h * targetRows.toDouble / math.max(1L, n)), 1e-9)
-  }
+  val DefaultTileRows = 100000L
 
   /** Per-tile LISA for any univariate statistic.
     * points:  (gid, x, y) — tile assignment source
     * values:  (gid, value)
     * weights: (gid, nbrs)
     * tileSize: super-tile edge length (in coordinate units);
-    *           <= 0 auto-sizes from point density ([[autoTileSize]]).
+    *           <= 0 auto-sizes from point density ([[DefaultTileRows]]).
     * Output: (gid, tile, stat, p, c).
     */
   def run(stat: Stat, points: DataFrame, values: DataFrame,
@@ -214,7 +199,8 @@ object TileLisa {
                weights: DataFrame, tileSize: Double,
                conf: Lisa.Conf = Lisa.Conf()): DataFrame = {
     val spark = points.sparkSession
-    val ts = if (tileSize > 0) tileSize else autoTileSize(points)
+    val ts = if (tileSize > 0) tileSize
+      else Tiling.densityEdge(points, DefaultTileRows, col("x"), col("y"))
     val tiles = points.select(col("gid").cast("long"),
       Tiling.cellIdCol(col("x"), col("y"), ts).as("tile"))
     val joined = tiles

@@ -70,8 +70,6 @@ object DistanceWeights {
       val cellSize = conf.threshold * (1 + 1e-9)
       val pts = points.select(col("gid"), col("x"), col("y"))
         .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), cellSize))
-      val deltas = (for (dx <- -1 to 1; dy <- -1 to 1)
-        yield dx.toLong * Tiling.Mul + dy).toArray
       // pin both join inputs to a cell-hashed width (the KnnWeights
       // group-pass convention): the candidate join + distance filter is
       // the compute-dense stage, but its inputs are byte-tiny — without
@@ -82,7 +80,7 @@ object DistanceWeights {
       // pair math spread by cell at any scale; values are unchanged.
       val w = 4 * points.sparkSession.sessionState.conf.numShufflePartitions
       pts
-        .withColumn("__delta", explode(typedLit(deltas)))
+        .withColumn("__delta", explode(typedLit(Tiling.blockDeltas(1))))
         .withColumn("__ccell", col("cell") + col("__delta"))
         .repartition(w, col("__ccell"))
         .join(pts.select(col("gid").as("bgid"), col("x").as("bx"),
@@ -185,7 +183,7 @@ object DistanceWeights {
     // under any cell size (the certification rule is exact).
     val p1 = KnnWeights.pairs(points,
       KnnWeights.Conf(k = 1, isArc = isArc, isMile = isMile,
-        cellSize = Some(KnnWeights.autoCellSize(points, 4))))
+        cellSize = Some(Tiling.densityEdge(points, 4, col("x"), col("y")))))
     p1.agg(max("dist")).head().getDouble(0)
   }
 }

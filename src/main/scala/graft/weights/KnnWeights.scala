@@ -2,7 +2,6 @@ package graft.weights
 
 import graft.core.{Dist, Tiling}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** k-nearest-neighbor spatial weights, rebuilt Spark-first.
@@ -13,14 +12,15 @@ import org.apache.spark.sql.functions._
   *
   * Spark shape (SURVEY §7.4): grid cells sized for ~k points per
   * Chebyshev-1 block; every point is SHIPPED to the 9 cells of its block
-  * (one shuffle keyed by cell), then a per-cell `flatMapGroups` computes
+  * (one shuffle keyed by cell), then a pass over each cell's run computes
   * each home point's top-k with a bounded max-heap — no global sort, no
   * second aggregation shuffle: the group pass emits finished neighbor
   * arrays. A point's top-k is provably complete when its kth-neighbor
   * distance < cellSize (anything outside the block is ≥ cellSize away);
-  * the rare uncertified points re-run through an expanding-radius
-  * join (they are <<1% for any sane cell size), ending in a broadcast
-  * brute-force pass. Deterministic: neighbor order (distance, gid) asc.
+  * the rare uncertified points (<<1% for any sane cell size) re-run
+  * through [[ringSearch]], an expanding-radius join ending in a
+  * broadcast brute-force pass. Deterministic: neighbor order (distance,
+  * gid) asc.
   *
   * Scale notes: shuffle volume is 9×|points| fixed-width rows; skewed
   * (dense) cells only grow the in-memory candidate buffer of their one
@@ -40,16 +40,6 @@ object KnnWeights {
       adaptiveBandwidth: Boolean = true,
       useKernelDiagonals: Boolean = false,
       cellSize: Option[Double] = None)
-
-  /** Auto cell size targeting ~k candidates per 3x3 block. */
-  def autoCellSize(points: DataFrame, k: Int): Double = {
-    val row = points.agg(min("x"), max("x"), min("y"), max("y"),
-      count(lit(1))).head()
-    val (mnx, mxx, mny, mxy, n) = (row.getDouble(0), row.getDouble(1),
-      row.getDouble(2), row.getDouble(3), row.getLong(4))
-    val w = math.max(mxx - mnx, 1e-9); val h = math.max(mxy - mny, 1e-9)
-    math.max(math.sqrt(w * h * math.max(1, k) / math.max(1L, n)), 1e-9)
-  }
 
   @inline private def distOf(conf: Conf)(ax: Double, ay: Double,
                                          bx: Double, by: Double): Double =
@@ -118,7 +108,7 @@ object KnnWeights {
     }
   }
 
-  /** Complete per-point result: (gid, x, y, nbrs sorted, dists sorted).
+  /** Complete per-point result: (gid, nbrs sorted, dists sorted).
     * `homeFilter` restricts which points get RESULTS (all points remain
     * candidates) — the engine-side analogue of `knn_weights_sub`'s
     * [start, end) sharding: the group pass skips non-matching homes, so
@@ -127,8 +117,8 @@ object KnnWeights {
   def knnRows(points: DataFrame, conf: Conf,
               homeFilter: Option[Column] = None): DataFrame = {
     val spark = points.sparkSession
-    import spark.implicits._
-    val s = conf.cellSize.getOrElse(autoCellSize(points, conf.k))
+    val s = conf.cellSize.getOrElse(
+      Tiling.densityEdge(points, math.max(1, conf.k), col("x"), col("y")))
     val k = conf.k
     val cfg = conf
 
@@ -140,11 +130,9 @@ object KnnWeights {
     // cell key — this stays in Tungsten binary rows through the whole
     // exchange (a Dataset groupByKey here deserializes all 9N rows into
     // JVM tuples before the shuffle and costs ~3x the entire kNN math).
-    val deltas = (for (dx <- -1 to 1; dy <- -1 to 1)
-      yield dx.toLong * Tiling.Mul + dy).toArray
     val homePred = homeFilter.getOrElse(lit(true))
     val shippedDf = pts
-      .withColumn("__delta", explode(typedLit(deltas)))
+      .withColumn("__delta", explode(typedLit(Tiling.blockDeltas(1))))
       .select((col("cell") + col("__delta")).as("tcell"), col("gid"),
         col("x"), col("y"),
         ((col("__delta") === 0L) && homePred).as("home"))
@@ -241,73 +229,87 @@ object KnnWeights {
       }
     val round1 = org.apache.spark.sql.graftshim.ColumnShim
       .internalDf(spark, outRdd, outSchema).cache()
-    val loopCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
     val resolved = round1.filter(col("certified"))
-      .select("gid", "x", "y", "nbrs", "dists")
+      .select("gid", "nbrs", "dists")
+    val stragglers = round1.filter(!col("certified"))
+      .select(col("gid"), Tiling.cellIdCol(col("x"), col("y"), s).as("cell"),
+        array(col("x"), col("y")).as("pos"))
+    // Materialize once (one pass over the already-cached parents), then
+    // release the internal caches — see graft.core.Materialize for the
+    // rationale and the reliable-checkpoint cluster mode.
+    if (stragglers.limit(1).count() == 0)
+      graft.core.Materialize.releasing(resolved, Seq(round1))
+    else {
+      // expanding-radius completion for the stragglers (normally <<1%)
+      val (rest, caches) = ringSearch(stragglers,
+        pts.select(col("gid"), col("cell"), array(col("x"), col("y")).as("pos")),
+        k, s, 2, (a, b) => distOf(cfg)(a(0), a(1), b(0), b(1)),
+        (r, p) => certBound(cfg, s, r, p(1)))
+      graft.core.Materialize.releasing(resolved.unionByName(rest),
+        round1 +: caches)
+    }
+  }
 
-    val unresolvedPts = round1.filter(!col("certified"))
-      .select("gid", "x", "y")
-      .withColumn("cell", Tiling.cellIdCol(col("x"), col("y"), s))
-
-    // expanding-radius completion for the stragglers (normally <<1%)
-    var done = resolved
-    var unresolved = unresolvedPts
-    var r = 2
+  /** Certified expanding-radius kNN over `(gid, cell, pos array<double>)`
+    * frames, shared by the spatial stragglers of [[knnRows]] and the
+    * attribute-space kNN of the neighbor match test. Each round joins
+    * every unresolved home's ±r block cells to the candidates and keeps a
+    * [[TopK]] per home; a home is certified when it holds k neighbors
+    * and its kth distance is below `bound(r, pos)` — the least distance
+    * any candidate outside the block can have. Certified homes leave,
+    * `r` doubles, and after r = 64 one broadcast pass finishes the rest
+    * (homes with fewer than k other points included). Returns the
+    * certified `(gid, nbrs, dists)` rows and the per-round caches, which
+    * the caller releases after materializing.
+    */
+  private[graft] def ringSearch(homes: DataFrame, cands: DataFrame, k: Int,
+      s: Double, r0: Int, dist: (Array[Double], Array[Double]) => Double,
+      bound: (Int, Array[Double]) => Double): (DataFrame, Seq[DataFrame]) = {
+    val spark = homes.sparkSession
+    import spark.implicits._
+    val candB = cands.select(col("gid").as("bgid"), col("cell").as("bcell"),
+      col("pos").as("bpos"))
+    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var done: DataFrame = null
+    var unresolved = homes
+    var r = r0
     var exhausted = false
-    var remaining = unresolved.limit(1).count() > 0
-    val ptsB = pts.select(col("gid").as("bgid"), col("x").as("bx"),
-      col("y").as("by"), col("cell").as("bcell"))
+    var remaining = true
     while (remaining) {
       val cand =
-        if (!exhausted) {
-          val blockDeltas = (for (dx <- -r to r; dy <- -r to r)
-            yield dx.toLong * Tiling.Mul + dy).toArray
+        if (!exhausted)
           unresolved
-            .withColumn("__delta", explode(typedLit(blockDeltas)))
-            .withColumn("__ccell", col("cell") + col("__delta"))
-            .join(ptsB, col("__ccell") === col("bcell"))
-            .filter(col("gid") =!= col("bgid"))
-        } else {
-          broadcast(unresolved).crossJoin(ptsB)
-            .filter(col("gid") =!= col("bgid"))
-        }
+            .withColumn("__delta", explode(typedLit(Tiling.blockDeltas(r))))
+            .join(candB, col("cell") + col("__delta") === col("bcell"))
+        else broadcast(unresolved).crossJoin(candB)
       val rr = r; val ex = exhausted
-      val topk = cand.select(col("gid"), col("x"), col("y"),
-          col("bgid"), col("bx"), col("by"))
-        .as[(Long, Double, Double, Long, Double, Double)]
+      val topk = cand.filter(col("gid") =!= col("bgid"))
+        .select(col("gid"), col("pos"), col("bgid"), col("bpos"))
+        .as[(Long, Array[Double], Long, Array[Double])]
         .groupByKey(_._1)
         .mapGroups { (gid, it) =>
           val heap = new TopK(k)
-          var x = 0.0; var y = 0.0
-          it.foreach { c =>
-            x = c._2; y = c._3
-            heap.offer(distOf(cfg)(x, y, c._5, c._6), c._4)
-          }
+          var pos: Array[Double] = null
+          it.foreach { c => pos = c._2; heap.offer(dist(pos, c._4), c._3) }
           val (nbrs, dists) = heap.sortedOut()
-          val certified = ex ||
-            (heap.size == k && heap.kth < certBound(cfg, s, rr, y))
-          (gid, x, y, nbrs, dists, certified)
-        }.toDF("gid", "x", "y", "nbrs", "dists", "certified").cache()
-      loopCaches += topk
-      done = done.unionByName(topk.filter(col("certified"))
-        .select("gid", "x", "y", "nbrs", "dists"))
+          (gid, nbrs, dists,
+            ex || (heap.size == k && heap.kth < bound(rr, pos)))
+        }.toDF("gid", "nbrs", "dists", "certified").cache()
+      caches += topk
+      val good = topk.filter(col("certified")).select("gid", "nbrs", "dists")
+      done = if (done == null) good else done.unionByName(good)
       if (exhausted) remaining = false
       else {
-        // anti-join, NOT topk.filter(!certified): a point with zero
+        // anti-join, NOT topk.filter(!certified): a home with zero
         // candidates in this radius is absent from topk entirely but
         // must stay unresolved
-        unresolved = unresolved.join(
-          topk.filter(col("certified")).select("gid"), Seq("gid"), "left_anti")
+        unresolved = unresolved.join(good.select("gid"), Seq("gid"), "left_anti")
         remaining = unresolved.limit(1).count() > 0
         r *= 2
         if (r > 64) exhausted = true
       }
     }
-    // Materialize once (one pass over the already-cached parents), then
-    // release the internal caches — see graft.core.Materialize for the
-    // rationale and the reliable-checkpoint cluster mode.
-    graft.core.Materialize.releasing(done, round1 +: loopCaches.toSeq)
+    (done, caches.toSeq)
   }
 
   /** `knn_weights_sub(gid, geom, k, start, end)` parity

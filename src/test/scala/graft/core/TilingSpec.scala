@@ -15,13 +15,17 @@ class TilingSpec extends AnyFunSuite {
 
   test("block and ring sizes") {
     val c = Tiling.cellId(5.0, 5.0, 1.0)
-    assert(Tiling.block(c, 1).length == 9)
-    assert(Tiling.block(c, 2).length == 25)
-    assert(Tiling.ring(c, 0).sameElements(Array(c)))
-    assert(Tiling.ring(c, 1).length == 8)
-    assert(Tiling.ring(c, 2).length == 16)
-    assert((Tiling.block(c, 2).toSet -- Tiling.block(c, 1).toSet) ==
-      Tiling.ring(c, 2).toSet)
+    def block(r: Int) = Tiling.blockDeltas(r).map(c + _)
+    def ring(r: Int) = for {
+      dx <- -r to r; dy <- -r to r
+      if math.max(math.abs(dx), math.abs(dy)) == r
+    } yield Tiling.cellOf(Tiling.cellIx(c) + dx, Tiling.cellIy(c) + dy)
+    assert(Tiling.blockDeltas(1).length == 9)
+    assert(Tiling.blockDeltas(2).length == 25)
+    assert(Tiling.blockDeltas(0).sameElements(Array(0L)))
+    assert((block(1).toSet -- block(0).toSet).size == 8)
+    assert((block(2).toSet -- block(1).toSet).size == 16)
+    assert((block(2).toSet -- block(1).toSet) == ring(2).toSet)
   }
 
   test("bboxCells covers the bbox") {

@@ -863,6 +863,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(w.count() > 0)
     assert(spark.sharedState.cacheManager.isEmpty,
       "knnRows must unpersist round1 and per-iteration topk caches")
+    // the neighbor match test's 3-dim attribute kNN runs the same ring
+    // search over its own cached cell frame
+    val vals = pts.select(col("gid"),
+      array(col("x"), col("y"), col("x") * col("y")).as("vals"))
+    val nm = graft.stats.NeighborMatch.run(pts, vals, k = 3)
+    assert(nm.count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "attribute kNN must unpersist its cell frame and per-round caches")
   }
 
   test("dedup / IVF / contiguity builds leave no cached DF behind") {

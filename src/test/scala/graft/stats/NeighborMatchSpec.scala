@@ -133,31 +133,45 @@ class NeighborMatchSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val n = 10000
-    val vals = (1 to n).map { i =>
+    val spread = (1 to n).map { i =>
       (i.toLong, Seq((i * 7919 % 10007).toDouble,
         (i * 104729 % 9973).toDouble, (i * 31 % 89).toDouble))
     }.toDF("gid", "vals")
-    val scaled = NeighborMatch.scaleVals(vals, 3, "standardize").cache()
-    val local = scaled.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
+    // flat: a constant second dim makes the density cell ~1e-5 wide while
+    // every pair differs by ≥ 1/sd ≈ 0.085 in the first scaled dim, so no
+    // home has a candidate inside its ±64-cell block: all certify only
+    // in the broadcast finish after r = 64 (asserted below)
+    val flat = (1 to 40).map { i =>
+      (i.toLong, Seq(i.toDouble, 7.0, (i * 31 % 89).toDouble))
+    }.toDF("gid", "vals")
+    for (vals <- Seq(spread, flat)) {
+      val scaled = NeighborMatch.scaleVals(vals, 3, "standardize").cache()
+      val local = scaled.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
 
-    val got3 = NeighborMatch.attrKnn(scaled, 3, 6, "euclidean")
-      .select("gid", "anbr").as[(Long, Long)].collect().toSet
-    val want3 = bruteAttrKnn(local, 6, manhattan = false)
-    assert(got3 == want3,
-      s"3-dim diff: ${(got3 diff want3).take(5)} / ${(want3 diff got3).take(5)}")
+      val got3 = NeighborMatch.attrKnn(scaled, 3, 6, "euclidean")
+        .select("gid", "anbr").as[(Long, Long)].collect().toSet
+      val want3 = bruteAttrKnn(local, 6, manhattan = false)
+      assert(got3 == want3,
+        s"3-dim diff: ${(got3 diff want3).take(5)} / ${(want3 diff got3).take(5)}")
 
-    val scaled2 = NeighborMatch.scaleVals(
-      vals.select($"gid", slice($"vals", 1, 2).as("vals")), 2, "standardize")
-      .cache()
-    val local2 = scaled2.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
-    val gotM = NeighborMatch.attrKnn(scaled2, 2, 6, "manhattan")
-      .select("gid", "anbr").as[(Long, Long)].collect().toSet
-    val wantM = bruteAttrKnn(local2, 6, manhattan = true)
-    assert(gotM == wantM,
-      s"manhattan diff: ${(gotM diff wantM).take(5)} / ${(wantM diff gotM).take(5)}")
+      val scaled2 = NeighborMatch.scaleVals(
+        vals.select($"gid", slice($"vals", 1, 2).as("vals")), 2, "standardize")
+        .cache()
+      val local2 = scaled2.select("gid", "sv").as[(Long, Seq[Double])].collect().toSeq
+      val gotM = NeighborMatch.attrKnn(scaled2, 2, 6, "manhattan")
+        .select("gid", "anbr").as[(Long, Long)].collect().toSet
+      val wantM = bruteAttrKnn(local2, 6, manhattan = true)
+      assert(gotM == wantM,
+        s"manhattan diff: ${(gotM diff wantM).take(5)} / ${(wantM diff gotM).take(5)}")
 
-    // no plan assertion (checkpointed output — see the 2-dim test note);
-    // exactness vs brute force at 10k rows is the guard
-    scaled.unpersist(); scaled2.unpersist()
+      if (vals eq flat) {
+        val s = graft.core.Tiling.densityEdge(scaled, 6, $"sv"(0), $"sv"(1))
+        val gap = local.map(_._2.head).sorted.sliding(2).map(p => p(1) - p(0)).min
+        assert(65 * s < gap, s"cell $s gap $gap")
+      }
+      // no plan assertion (checkpointed output — see the 2-dim test note);
+      // exactness vs brute force at 10k rows is the guard
+      scaled.unpersist(); scaled2.unpersist()
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.stats
 
 import graft.SparkFixture
+import graft.core.Tiling
 import graft.weights.KnnWeights
 import org.apache.spark.sql.functions.{array, col}
 import org.scalatest.funsuite.AnyFunSuite
@@ -64,7 +65,7 @@ class TileLisaSpec extends AnyFunSuite {
     val v = values(300)
     // targetRows larger than n → one tile; the helper must agree with the
     // density formula and the auto run must equal the explicit-size run
-    val s = TileLisa.autoTileSize(pts)
+    val s = Tiling.densityEdge(pts, TileLisa.DefaultTileRows, col("x"), col("y"))
     assert(s > 0)
     val auto = TileLisa.localMoran(pts, v, w, tileSize = 0.0)
       .orderBy("gid").collect()
@@ -72,7 +73,7 @@ class TileLisaSpec extends AnyFunSuite {
       .orderBy("gid").collect()
     assert(auto.sameElements(explicit))
     // a small row target yields genuinely smaller tiles (more windows)
-    val sSmall = TileLisa.autoTileSize(pts, targetRows = 10)
+    val sSmall = Tiling.densityEdge(pts, 10, col("x"), col("y"))
     assert(sSmall < s)
     val nTiles = TileLisa.localMoran(pts, v, w, tileSize = sSmall)
       .select("tile").distinct().count()

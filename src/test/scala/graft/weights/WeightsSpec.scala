@@ -44,14 +44,32 @@ class WeightsSpec extends AnyFunSuite {
 
   test("kNN tiny cell size forces multi-round expansion, still exact") {
     import spark.implicits._
-    val df = points(60)
-    val local = df.as[(Long, Double, Double)].collect().toSeq
-    val got = KnnWeights.pairs(df, KnnWeights.Conf(k = 5, cellSize = Some(0.5)))
-      .orderBy("gid", "rk").select("gid", "nbr").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val want = bruteKnn(local, 5)
-    got.foreach { case (g, nbrs) => assert(nbrs == want(g)) }
-    assert(got.keySet == want.keySet)
+    // far clusters: gids 1-3 sit within 0.3 of each other and ≥ 140 from
+    // gids 4-20, so their ±64-cell block (32.5 units at cell 0.5) holds
+    // only 2 candidates for k = 5 — they certify only in the broadcast
+    // finish after r = 64
+    val far = ((1 to 3).map(i => (i.toLong, i * 0.1, 0.0)) ++
+      (4 to 20).map(i => (i.toLong, 100.0 + (i * 193 % 17) * 0.3,
+        100.0 + (i * 499 % 13) * 0.3))).toDF("gid", "x", "y")
+    for (df <- Seq(points(60), far)) {
+      val local = df.as[(Long, Double, Double)].collect().toSeq
+      val got = KnnWeights.pairs(df, KnnWeights.Conf(k = 5, cellSize = Some(0.5)))
+        .orderBy("gid", "rk").select("gid", "nbr").as[(Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+      val want = bruteKnn(local, 5)
+      got.foreach { case (g, nbrs) => assert(nbrs == want(g)) }
+      assert(got.keySet == want.keySet)
+    }
+  }
+
+  test("kNN auto cell size over empty points fails with a named cause") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Double, Double)].toDF("gid", "x", "y")
+    val e = intercept[IllegalArgumentException] {
+      KnnWeights.build(empty, KnnWeights.Conf(k = 4))
+    }
+    assert(e.getMessage.contains("density cell edge over empty points"),
+      e.getMessage)
   }
 
   test("distance band matches brute force incl. boundary-equal distance") {
